@@ -33,8 +33,4 @@ object TextFns {
       transform(sequence(lit(1), length(t) - (k - 1)), i => t.substr(i, lit(k))))
       .otherwise(array().cast("array<string>"))
   }
-
-  /** 32-bit oracle-parity hashes of the k-gram shingles. */
-  def shingleHashes(c: Column, k: Int): Column =
-    transform(shingles(c, k), s => HashFns.hash32(s))
 }

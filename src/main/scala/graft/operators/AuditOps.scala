@@ -513,8 +513,9 @@ object AuditOps {
     * span blocks). [[nameFuzzyPairs]] reports the candidate PAIRS; this
     * resolves them into entities — cluster id (min custkey), size, and
     * the surviving-representative flag, the same verdict shape as
-    * [[DedupOps.dedupClusters]], whose pointer-doubling CC core it
-    * reuses (O(log diameter) rounds, driver sees only changed counts).
+    * [[DedupOps.dedupClusters]], whose CC core ([[DedupOps.ccLabels]])
+    * it reuses (rounds grow with log(nodes), driver sees only changed
+    * counts).
     *
     * Candidates come from the deletion-variant trick: strings within
     * edit distance 1 share a deletion variant, so the self-join runs on

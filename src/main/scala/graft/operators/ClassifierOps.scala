@@ -279,12 +279,9 @@ object ClassifierOps {
       // no consumer outlives the eager summary row — release the
       // feature blocks now instead of accumulating MEMORY_AND_DISK
       // blocks across calls in sessions that never call
-      // Memo.releaseManaged() (r14 advice). Plain unpersist, NOT
-      // Memo.release: the frame is a persist (unpersist suffices), and
-      // release() would also unpersist every LogicalRDD leaf inside the
-      // plan — including the session-shared docs_spread memo checkpoint,
-      // stranding every later text-family consumer on dropped blocks
-      // (surfaced as CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in r15).
+      // Memo.releaseManaged() (r14 advice). Plain unpersist suffices:
+      // the frame is a persist, not a checkpoint, so there is no
+      // checkpoint RDD for Memo.release to free.
       cached.unpersist(blocking = false)
       out
     }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{HashFns, TextFns}
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,13 +15,14 @@ import org.apache.spark.sql.functions._
   * document-frequency cap; SimHash pairs come from Hamming-band buckets
   * (pigeonhole: ≤3 differing bits over 4 bands ⇒ one band collides).
   *
-  * Cache lifecycle: operators persist() intermediates that feed both
-  * sides of a self-join (the plan would otherwise recompute the
-  * signature scan per side). The blocks live until the session drops
-  * them — CALLERS running many operators in one long-lived session
-  * should `spark.catalog.clearCache()` between logical jobs, as
-  * [[graft.Verify]] and [[graft.Bench]] do per query; only the
-  * iterative connected-components loop unpersists eagerly itself.
+  * Cache lifecycle: intermediates that feed several consumers (both
+  * sides of a self-join) are pinned with `Memo.managedCheckpoint` —
+  * the plan would otherwise recompute the signature scan per side — and
+  * stay pinned until `Memo.releaseManaged()`, which CALLERS running many
+  * operators in one long-lived session invoke between logical jobs, as
+  * [[graft.Verify]] and [[graft.Bench]] do per query. The connected-
+  * components loop ([[ccLabels]]) frees its own per-round blocks and
+  * returns its labels through the same managed path.
   */
 object DedupOps {
   import HashFns._
@@ -542,16 +544,9 @@ object DedupOps {
   }
 
   /** Duplicate clusters = connected components over the MinHash-LSH
-    * near-dup pair graph, via min-label propagation with pointer doubling
-    * (hash-to-min): each round takes the min label over direct neighbors,
-    * then follows the new label's own label ("label of label") — so label
-    * distance halves per round and the loop converges in O(log diameter)
-    * rounds, not O(diameter) like plain propagation (chain-shaped LSH
-    * components made the plain form 20×+ slower). Edges are
-    * pre-partitioned by src so the per-round propagate join reuses the
-    * cached layout instead of re-shuffling the edge table. Driver sees
-    * only the changed-label COUNT, never data. Output: every clustered
-    * doc with its component id (= min doc_id), component size, and a
+    * near-dup pair graph ([[ccLabels]]). Driver sees only the
+    * changed-label COUNT, never data. Output: every clustered doc with
+    * its component id (= min doc_id), component size, and a
     * kept-representative flag — the final "which docs survive dedup"
     * verdict.
     */
@@ -569,86 +564,76 @@ object DedupOps {
           .partitionBy(col("cluster_id"))))
       .withColumn("is_representative", col("doc_id") === col("cluster_id"))
 
+  /** Round cap of [[ccLabels]]: a 10⁵-node path converges in ~20 rounds,
+    * so hitting the cap means a bug, not a big graph.
+    */
+  private val CcMaxRounds = 64
+
   /** Min-label connected components over an undirected pair list
-    * (doc_a, doc_b) via pointer doubling — the shared CC core behind
-    * [[dedupClusters]] and [[graft.operators.MultimodalOps
-    * .multimodalDedupClusters]]. Returns (node, cluster_id) for every
-    * node that appears in at least one pair; cluster_id is the
-    * component's minimum node id (its deterministic representative).
+    * (doc_a, doc_b) — the shared CC core behind [[dedupClusters]],
+    * [[graft.operators.AuditOps.erClusters]] and
+    * [[graft.operators.MultimodalOps.multimodalDedupClusters]]. Returns
+    * (node, cluster_id), typed like the input ids, for every node that
+    * appears in at least one pair; cluster_id is the component's minimum
+    * node id (its deterministic representative).
+    *
+    * Each node keeps a label f, a node of its component no larger than
+    * itself; it starts as the minimum of the node and its neighbours (the
+    * first hop, taken while the adjacency is built, saves a round). A
+    * round is one step of FastSV (Zhang, Azad & Hu, 2020):
+    * min-label propagation with pointer doubling plus hooking. It takes
+    * the grandparent gf = f(f) (a re-keyed join), propagates its minimum
+    * over the edges (a narrow join of the adjacency with the labels and
+    * one min-reduce), then lowers f to that minimum for the node AND for
+    * its parent. Without the hooking, propagation plus pointer jumping
+    * moves the minimum one edge per hop along a path with shuffled ids
+    * (a 5 000-node path took ~1 000 rounds of 2 hops); with it, rounds
+    * grow with log(nodes) (14 for that path, 7 for er_clusters at sf0.1).
+    *
+    * The adjacency is hash-partitioned once (width = the session's
+    * `spark.sql.shuffle.partitions`) and never reshuffles. A round is
+    * one Spark job: its changed-label count is the action that
+    * materializes its local checkpoint; the previous round's blocks go
+    * once the next round is pinned, and the final labels are handed to
+    * [[Memo.managedCheckpoint]] (freed by `Memo.releaseManaged()`).
+    * Several steps per job measured slower at sf0.1 (er_clusters 3.2–3.6
+    * s at one step, 3.8–4.1 s at two or four).
     */
   private[operators] def ccLabels(pairs: DataFrame): DataFrame = {
-    // localCheckpoint (not persist): iterative plans otherwise re-derive
-    // the whole lineage each round — the checkpoint pins round N's labels
-    // as a leaf so round N+1's job is O(edges), not O(history). Eager, so
-    // each round executes exactly once; blocks live on executors, the
-    // driver still only ever sees the changed-label count.
-    val edges = pairs.union(pairs.select(col("doc_b"), col("doc_a")))
-      .toDF("src", "dst").repartition(col("src")).localCheckpoint(true)
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("cluster_id", col("node")).localCheckpoint(true)
-    // AQE stays ON here — it converts every loop join to a runtime
-    // broadcast; with it off the checkpointed (stats-less) label frames
-    // plan as sort-merge joins and each round ran ~9× slower, and the
-    // round-14 attempt (AQE off + explicit broadcast hints on every
-    // label-sized side) was worse still: without AQE's per-stage
-    // materialization the hop subtrees recompute combinatorially
-    // through the broadcast builds (rounds 1.0-1.3 s → 2.3-6.5 s,
-    // measured and reverted; data-sized edge partitioning was also
-    // tried — within noise, reverted). The residual per-round cost is
-    // AQE's sequential query-stage materialization (~60-80 ms per
-    // exchange), which the multi-hop batching below amortizes.
-    ccLoop(edges, labels)
-  }
-
-  private def ccLoop(edges: DataFrame, labels0: DataFrame): DataFrame = {
-    var labels = labels0
-    var changed = 1L
-    var rounds = 0
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    while (changed > 0 && rounds < 32) {
-      val t0 = System.nanoTime()
-      // several edge-hops per checkpointed round: each round's wall time
-      // is dominated by the FIXED job overhead (~0.3 s), not the ~10⁴-row
-      // cluster work, and min-spread through a long-diameter chain
-      // advances one direct hop per propagation (the pointer jump can't
-      // shortcut past where the minimum has physically reached — the
-      // er_clusters name-chain graph measured 26 one-hop rounds). Four
-      // hops inside the SAME job cut rounds ~4× for pennies of extra
-      // per-job work (8 hops was tried and reverted: the pointer-jump
-      // self-join duplicates the whole hop chain and past ~4 hops
-      // exchange reuse stops saving it — rounds went 0.6 s → 8 s).
-      val onehop = (1 to 4).foldLeft(
-          labels.select(col("node"), col("cluster_id"))) { (cur, _) =>
-        val prop = edges.join(cur, edges("src") === cur("node"))
-          .select(edges("dst").as("node"), cur("cluster_id"))
-        // no persist: the self-join reads the identical subplan twice and
-        // Spark's ReusedExchange dedups it inside the one checkpoint job
-        cur.union(prop)
-          .groupBy(col("node")).agg(min(col("cluster_id")).as("cluster_id"))
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val idType = pairs.schema.head.dataType
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val adj = pairs.select(pairs.columns.map(col(_).cast("long")).toSeq: _*).rdd
+      .flatMap(r => Iterator(r.getLong(0) -> r.getLong(1), r.getLong(1) -> r.getLong(0)))
+      .groupByKey(part).mapValues(_.toArray).persist()
+    var labels = adj.mapPartitions(
+      _.map { case (n, nbrs) => n -> math.min(n, nbrs.min) }, preservesPartitioning = true)
+    try {
+      var changed = 1L
+      var rounds = 0
+      while (changed > 0) {
+        if (rounds == CcMaxRounds) throw new IllegalStateException(
+          s"connected components did not converge in $rounds rounds")
+        val fg = labels.map(_.swap).join(labels, part)
+          .map { case (p, (n, gp)) => n -> (p, gp) }.partitionBy(part)
+        val minGp = adj.join(fg, part)
+          .flatMap { case (_, (nbrs, (_, gp))) => nbrs.iterator.map(_ -> gp) }
+          .reduceByKey(part, math.min(_, _))
+        val next = fg.join(minGp, part)
+          .flatMap { case (n, ((p, gp), m)) => Iterator(n -> math.min(gp, m), p -> m) }
+          .reduceByKey(part, math.min(_, _)).localCheckpoint()
+        changed = next.join(labels, part).filter { case (_, (l, prev)) => l < prev }.count()
+        labels.unpersist(blocking = false)
+        labels = next
+        rounds += 1
       }
-      // pointer doubling: a label is always a node of the same component,
-      // so jump straight to that node's (smaller-or-equal) label. The
-      // changed flag rides the SAME checkpoint job (vs a separate
-      // join+count job per round — the fixed-overhead killer when the
-      // graph is small); the convergence count is then a leaf-only scan.
-      // (A second jump per round was tried and reverted: on the measured
-      // graphs round count is limited by how far the component minimum
-      // has SPREAD through direct edges, not by pointer-chain depth —
-      // the extra self-join paid ~30% per round for zero fewer rounds.)
-      val next = onehop
-        .join(onehop.select(col("node").as("mid"), col("cluster_id").as("lbl2")),
-          col("cluster_id") === col("mid"))
-        .select(col("node"), col("lbl2").as("cluster_id"))
-        .join(labels.select(col("node"), col("cluster_id").as("prev")), Seq("node"))
-        .select(col("node"), col("cluster_id"),
-          (col("cluster_id") < col("prev")).as("chg"))
-        .localCheckpoint(true)
-      changed = next.filter(col("chg")).count()
-      labels = next.select(col("node"), col("cluster_id"))
-      rounds += 1
-      if (dbg) println(s"[cc] round $rounds changed=$changed ${(System.nanoTime()-t0)/1e9}s")
+      Memo.managedCheckpoint(labels.toDF("node", "cluster_id")
+        .select(col("node").cast(idType), col("cluster_id").cast(idType)))
+    } finally {
+      labels.unpersist(blocking = false)
+      adj.unpersist(blocking = false)
     }
-    labels.select(col("node"), col("cluster_id"))
   }
 
   /** The deduplicated corpus: drop every clustered doc except its
