@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** JVM pids alive on this box that are neither this process nor one of
     * its ancestors (sbt launching us is fine; a concurrent Spark suite is
@@ -56,13 +55,8 @@ object Bench {
       }
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    GraftSession.register(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus, cpus)
     spark.sparkContext.setLogLevel("WARN")
     // optional subset: `runMain graft.Bench q1 q2` re-times named
     // queries only (regression adjudication) — the driver passes none

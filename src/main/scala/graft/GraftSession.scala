@@ -82,9 +82,10 @@ object GraftSession {
     * [[registerView]] and pay only that operator's build.
     *
     * HAZARD: a later `Memo.invalidate()` unpersists the checkpointed
-    * blocks these view plans rest on; re-call `registerViews` (or
-    * `registerView`) after any invalidate, or stale views fail at
-    * query time with missing-block errors.
+    * blocks these view plans rest on, and so does `Memo.releaseManaged()`
+    * for the operators' pass-scoped pins; re-call `registerViews` (or
+    * `registerView`) after either, or stale views fail at query time
+    * with missing-block errors.
     *
     * Parameterized views — the operator surface pins each view's
     * parameters at BUILD time, read from session conf (set them BEFORE

@@ -243,8 +243,10 @@ object ClassifierOps {
     // branches read the warm cache. (An eager data-sized checkpoint was
     // tried round 14 and measured within noise — the loop's cost is
     // per-job driver latency, not task count.)
-    val cached = Memo.managedPersist(feats)
-    locally {
+    // Call-scoped, not a Memo pin: the finally below frees it once the
+    // summary row is pinned.
+    val cached = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
       // trained weights are Memo-shared (keyed by the feature-frame
       // plan): 8 IRLS corpus scans per session per input, not per call,
       // reported as the `memo:quality_lr` bench line item
@@ -260,7 +262,11 @@ object ClassifierOps {
       val aucTrained = aucMicro(
         cached.select(scoreBucket(trainedMicro).as("s"), col("y")),
         "auc_trained_micro")
-      counts
+      // ONE summary row: materializing it eagerly runs all three
+      // downstream legs against the still-persisted feature frame, which
+      // no consumer then outlives; the row's checkpoint blocks are
+      // managed and released with the session's other per-call frames
+      Memo.managedCheckpoint(counts
         .crossJoin(broadcast(aucFixed))
         .crossJoin(broadcast(aucTrained))
         .select(
@@ -268,22 +274,7 @@ object ClassifierOps {
           (col("n_docs") - col("n_keep")).as("n_drop"),
           col("auc_fixed_micro"),
           (col("auc_trained_micro") >= AucFloorMicro).as("trained_auc_ge_floor"),
-          (col("auc_trained_micro") >= col("auc_fixed_micro")).as("trained_ge_fixed"))
-        // ONE summary row: materializing it eagerly runs all three
-        // downstream legs against the still-checkpointed feature frame
-        // (previously each leg re-derived features(documents) from
-        // scratch after a finally-unpersist); the checkpoint blocks are
-        // managed and released with the session's other per-call frames
-        .localCheckpoint(eager = true)
-    } match { case out =>
-      // no consumer outlives the eager summary row — release the
-      // feature blocks now instead of accumulating MEMORY_AND_DISK
-      // blocks across calls in sessions that never call
-      // Memo.releaseManaged() (r14 advice). Plain unpersist suffices:
-      // the frame is a persist, not a checkpoint, so there is no
-      // checkpoint RDD for Memo.release to free.
-      cached.unpersist(blocking = false)
-      out
-    }
+          (col("auc_trained_micro") >= col("auc_fixed_micro")).as("trained_ge_fixed")))
+    } finally cached.unpersist(blocking = false)
   }
 }

@@ -604,6 +604,8 @@ object DedupOps {
     import spark.implicits._
     val idType = pairs.schema.head.dataType
     val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    // RDD-level pins, not Memo pins: Memo pins DataFrames, and the loop
+    // frees each round's blocks itself once the next round is pinned
     val adj = pairs.select(pairs.columns.map(col(_).cast("long")).toSeq: _*).rdd
       .flatMap(r => Iterator(r.getLong(0) -> r.getLong(1), r.getLong(1) -> r.getLong(0)))
       .groupByKey(part).mapValues(_.toArray).persist()

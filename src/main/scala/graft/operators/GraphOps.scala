@@ -20,6 +20,8 @@ import org.apache.spark.sql.functions._
   * on orderkey); the iterations run over the NATION-sized rank table ×
   * the ≤|nations|² edge list — driver-loop of 5 tiny joins, no
   * checkpointing needed because every iteration's input is dim-bounded.
+  * The edge lists (and HITS's per-round scores) are pinned with
+  * [[Memo.managedCheckpoint]], so `Memo.releaseManaged()` frees them.
   */
 object GraphOps {
 
@@ -83,11 +85,11 @@ object GraphOps {
     // the edge list is the only fact-derived input and every iteration
     // re-reads it — pin the ≤|nations|² rows once so the fact joins run
     // exactly once, not once per iteration
-    val edges = tradeEdges(lineitem, orders, customer, supplier, nation)
-      .withColumn("outdeg",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("src"))))
-      .localCheckpoint(true)
+    val edges = Memo.managedCheckpoint(
+      tradeEdges(lineitem, orders, customer, supplier, nation)
+        .withColumn("outdeg",
+          count(lit(1)).over(org.apache.spark.sql.expressions.Window
+            .partitionBy(col("src")))))
     val nNodes = nodes.agg(count(lit(1)).as("n_nodes"))
     // r0 = 10⁶ div N and base = 15·10⁴ div N, exactly as the oracle
     var ranks = nodes.crossJoin(broadcast(nNodes))
@@ -127,8 +129,8 @@ object GraphOps {
       customer: DataFrame, supplier: DataFrame, nation: DataFrame,
       iterations: Int = 3): DataFrame = {
     val nodes = nation.select(col("n_name").as("nation"))
-    val edges = tradeEdges(lineitem, orders, customer, supplier, nation)
-      .localCheckpoint(true)
+    val edges = Memo.managedCheckpoint(
+      tradeEdges(lineitem, orders, customer, supplier, nation))
     def normalize(raw: DataFrame, key: String, out: String): DataFrame = {
       val tot = raw.agg(sum(col("raw")).as("tot"))
       nodes.join(raw, col("nation") === col(key), "left")
@@ -144,14 +146,12 @@ object GraphOps {
       // normalizer total and the join, so an unpinned chain doubles the
       // logical plan per half-round (2⁶ leaf copies by round 3 —
       // analysis time, not data, is what blows up)
-      a = normalize(edges
+      a = Memo.managedCheckpoint(normalize(edges
         .join(h.withColumnRenamed("nation", "hn"), col("src") === col("hn"))
-        .groupBy(col("dst")).agg(sum(col("h")).as("raw")), "dst", "a")
-        .localCheckpoint(true)
-      h = normalize(edges
+        .groupBy(col("dst")).agg(sum(col("h")).as("raw")), "dst", "a"))
+      h = Memo.managedCheckpoint(normalize(edges
         .join(a.withColumnRenamed("nation", "an"), col("dst") === col("an"))
-        .groupBy(col("src")).agg(sum(col("a")).as("raw")), "src", "h")
-        .localCheckpoint(true)
+        .groupBy(col("src")).agg(sum(col("a")).as("raw")), "src", "h"))
     }
     h.join(a, Seq("nation"))
       .select(col("nation"), col("h").as("hub_micro"),
@@ -172,9 +172,9 @@ object GraphOps {
     */
   def nationTradeTriangles(lineitem: DataFrame, orders: DataFrame,
       customer: DataFrame, supplier: DataFrame, nation: DataFrame): DataFrame = {
-    val edges = tradeEdges(lineitem, orders, customer, supplier, nation)
-      .filter(col("src") =!= col("dst"))
-      .localCheckpoint(true)
+    val edges = Memo.managedCheckpoint(
+      tradeEdges(lineitem, orders, customer, supplier, nation)
+        .filter(col("src") =!= col("dst")))
     val cycles = edges.select(col("src").as("a"), col("dst").as("b"))
       .join(edges.select(col("src").as("b2"), col("dst").as("c")),
         col("b") === col("b2"))
@@ -210,10 +210,10 @@ object GraphOps {
       rounds: Int = 3): DataFrame = {
     val e0 = tradeEdges(lineitem, orders, customer, supplier, nation)
       .filter(col("src") =!= col("dst"))
-    val und = e0.select(col("src").as("u"), col("dst").as("v"))
-      .unionByName(e0.select(col("dst").as("u"), col("src").as("v")))
-      .distinct()
-      .localCheckpoint(true)
+    val und = Memo.managedCheckpoint(
+      e0.select(col("src").as("u"), col("dst").as("v"))
+        .unionByName(e0.select(col("dst").as("u"), col("src").as("v")))
+        .distinct())
     val nodes = nation.select(col("n_name").as("nation"))
     val l0 = nodes.select(col("nation"), col("nation").as("community"))
     (1 to rounds).foldLeft(l0) { (labels, _) =>
@@ -250,16 +250,15 @@ object GraphOps {
   def nationHopDistance(lineitem: DataFrame, orders: DataFrame,
       customer: DataFrame, supplier: DataFrame, nation: DataFrame,
       topK: Int = 96, maxHops: Int = 6): DataFrame = {
-    val backbone = tradeEdgeWeights(lineitem, orders, customer, supplier,
-        nation)
-      .filter(col("src") =!= col("dst"))
-      // bounded window: ≤|nations|² rows by construction
-      .withColumn("rk", row_number().over(org.apache.spark.sql.expressions
-        .Window.orderBy(col("cnt").desc, col("src"), col("dst"))))
-      .filter(col("rk") <= topK)
-      // edge-distinct names keep the iterated frontier join unambiguous
-      .select(col("src").as("e_src"), col("dst").as("e_dst"))
-      .localCheckpoint(true)
+    val backbone = Memo.managedCheckpoint(
+      tradeEdgeWeights(lineitem, orders, customer, supplier, nation)
+        .filter(col("src") =!= col("dst"))
+        // bounded window: ≤|nations|² rows by construction
+        .withColumn("rk", row_number().over(org.apache.spark.sql.expressions
+          .Window.orderBy(col("cnt").desc, col("src"), col("dst"))))
+        .filter(col("rk") <= topK)
+        // edge-distinct names keep the iterated frontier join unambiguous
+        .select(col("src").as("e_src"), col("dst").as("e_dst")))
     val r0 = nation.select(col("n_name").as("s"), col("n_name").as("v"),
       lit(0L).as("hops"))
     val reach = (1 to maxHops).foldLeft(r0) { (r, _) =>

@@ -1,10 +1,13 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 
 /** Session-scoped materialized-intermediate reuse — the engine-side
-  * analog of a materialized view. Pipelines compose operators that share
-  * expensive intermediates (the LSH pair graph feeds dedup_minhash_lsh,
+  * analog of a materialized view — and the one owner of every frame the
+  * operators pin. Pipelines compose operators that share expensive
+  * intermediates (the LSH pair graph feeds dedup_minhash_lsh,
   * dedup_clusters, dedup_survivors AND curated_corpus); without reuse,
   * each query in one session re-derives the whole graph — at 100 TB that
   * means re-minhashing the corpus four times.
@@ -19,8 +22,17 @@ import org.apache.spark.sql.DataFrame
   * Materialization: eager `localCheckpoint` — the result is computed
   * exactly once and pinned as executor-resident leaf blocks (surviving
   * `spark.catalog.clearCache()`, which drops only catalog/dataset cache
-  * entries between queries). Only bounded intermediates (pair lists,
-  * cluster labels) belong here — never corpus-sized data.
+  * entries between queries). Two scopes, each with one release:
+  *
+  *  - session: [[cached]] / [[cachedMulti]] frames and [[cachedModel]]
+  *    models, kept until [[invalidate]];
+  *  - pass: [[managedCheckpoint]] frames, kept until [[releaseManaged]]
+  *    (or [[invalidate]]).
+  *
+  * Size: memoized frames are bounded intermediates (pair lists, cluster
+  * labels, per-term rollups) with two exceptions, `docs_spread` and
+  * `doc_shingle_sets`, which are corpus-sized and stay pinned for the
+  * whole session; models are a few KB of centroids/weights.
   *
   * Concurrency: a build may RE-ENTER `cached` for a sub-derivation
   * (clusters → minhash pair graph), so the Spark job must never run
@@ -34,10 +46,8 @@ import org.apache.spark.sql.DataFrame
   * it would loop — which plain recursion would too).
   */
 object Memo {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]
+  // frames and models share one map; the key's kind prefix keeps them apart
+  private val cache = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]
   private val buildLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]
   private val buildSeconds =
@@ -45,11 +55,16 @@ object Memo {
   // the last build's pre-checkpoint QueryExecution per memo name: the
   // expensive plan shapes live in the DERIVATIONS, not the queries that
   // consume their checkpointed leaves — PlanDigestSpec locks these too
-  private val builtPlans = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.execution.QueryExecution]
+  private val builtPlans =
+    new java.util.concurrent.ConcurrentHashMap[String, QueryExecution]
   private val nestedSeconds = new ThreadLocal[Double] {
     override def initialValue: Double = 0.0
   }
+  // the checkpoint RDD behind every frame Memo pinned, by scope
+  private val sessionPins =
+    java.util.Collections.synchronizedList(new java.util.ArrayList[RDD[_]])
+  private val passPins =
+    java.util.Collections.synchronizedList(new java.util.ArrayList[RDD[_]])
 
   private def key(name: String, input: DataFrame): String = {
     val plan = input.queryExecution.logical.canonicalized
@@ -70,25 +85,49 @@ object Memo {
     * inputs can never alias. The build closure captures the inputs
     * itself (they are not threaded through, unlike the 1-ary form).
     */
-  def cachedMulti(name: String, inputs: Seq[DataFrame])(build: => DataFrame): DataFrame = {
-    val k = inputs.map(i => key(name, i)).mkString("\u0000")
+  def cachedMulti(name: String, inputs: Seq[DataFrame])(build: => DataFrame): DataFrame =
+    buildOnce("frame", name, inputs) {
+      val raw = build
+      builtPlans.put(name, raw.queryExecution)
+      pin(raw, sessionPins)
+    }
+
+  /** Driver-side TRAINED-MODEL reuse — same keying and build-seconds
+    * attribution as [[cachedMulti]], but the cached value is a plain
+    * Scala object (a PQ codebook, LR weights) rather than a DataFrame.
+    * The need: `trainPqCodebook` / `trainQualityLr` are the engine's two
+    * most expensive derivations, and without memoization every
+    * invocation (each bench iteration, each downstream consumer) re-runs
+    * their Lloyd's/IRLS scans over the corpus. Models here are bounded
+    * by construction (≤ a few KB of centroids/weights — the same
+    * dim-table-size contract the training loops already promise the
+    * driver), so caching them can never pin data-scale state. Embed
+    * parameters that change the result (iteration counts, ridge) in
+    * `name`; the input plans key the rest.
+    */
+  def cachedModel[T <: AnyRef](name: String, inputs: Seq[DataFrame])(build: => T): T =
+    buildOnce("model", name, inputs)(build)
+
+  /** The build-once core of every memo: lock-free hit, else build under
+    * the key's monitor and publish. Build seconds are EXCLUSIVE — a
+    * build that re-enters a memo for a sub-derivation must not
+    * double-count the inner build's seconds (each derivation reports
+    * under its own name).
+    */
+  private def buildOnce[T <: AnyRef](kind: String, name: String,
+      inputs: Seq[DataFrame])(build: => T): T = {
+    val k = inputs.map(i => key(name, i)).mkString(kind + "\u0000", "\u0000", "")
     val hit = cache.get(k)
-    if (hit != null) return hit
-    val lock = buildLocks.computeIfAbsent(k, _ => new Object)
-    lock.synchronized {
+    if (hit != null) hit.asInstanceOf[T]
+    else buildLocks.computeIfAbsent(k, _ => new Object).synchronized {
       val again = cache.get(k) // raced builder may have published
-      if (again != null) again
+      if (again != null) again.asInstanceOf[T]
       else {
-        // exclusive timing: a build that re-enters cached() for a
-        // sub-derivation must not double-count the inner build's seconds
-        // (each derivation reports under its own name)
         val outerNested = nestedSeconds.get
         nestedSeconds.set(0.0)
         val t0 = System.nanoTime()
         try {
-          val raw = build
-          builtPlans.put(name, raw.queryExecution)
-          val built = raw.localCheckpoint(eager = true)
+          val built = build
           val elapsed = (System.nanoTime() - t0) / 1e9
           buildSeconds.merge(name, elapsed - nestedSeconds.get, (a, b) => a + b)
           nestedSeconds.set(outerNested + elapsed)
@@ -106,79 +145,33 @@ object Memo {
     }
   }
 
-  /** Driver-side TRAINED-MODEL reuse — same keying and build-seconds
-    * attribution as [[cachedMulti]], but the cached value is a plain
-    * Scala object (a PQ codebook, LR weights) rather than a DataFrame.
-    * The need: `trainPqCodebook` / `trainQualityLr` are the engine's two
-    * most expensive derivations, and without memoization every
-    * invocation (each bench iteration, each downstream consumer) re-runs
-    * their Lloyd's/IRLS scans over the corpus. Models here are bounded
-    * by construction (≤ a few KB of centroids/weights — the same
-    * dim-table-size contract the training loops already promise the
-    * driver), so caching them can never pin data-scale state. Embed
-    * parameters that change the result (iteration counts, ridge) in
-    * `name`; the input plans key the rest.
-    */
-  def cachedModel[T <: AnyRef](name: String, inputs: Seq[DataFrame])(build: => T): T = {
-    val k = inputs.map(i => key(name, i)).mkString("\u0000")
-    val hit = modelCache.get(k)
-    if (hit != null) return hit.asInstanceOf[T]
-    val lock = buildLocks.computeIfAbsent("model:" + k, _ => new Object)
-    lock.synchronized {
-      val again = modelCache.get(k)
-      if (again != null) again.asInstanceOf[T]
-      else {
-        val outerNested = nestedSeconds.get
-        nestedSeconds.set(0.0)
-        val t0 = System.nanoTime()
-        try {
-          val built = build
-          val elapsed = (System.nanoTime() - t0) / 1e9
-          buildSeconds.merge(name, elapsed - nestedSeconds.get, (a, b) => a + b)
-          nestedSeconds.set(outerNested + elapsed)
-          modelCache.put(k, built)
-          built
-        } catch {
-          case e: Throwable =>
-            nestedSeconds.set(outerNested + (System.nanoTime() - t0) / 1e9)
-            throw e
-        }
-      }
-    }
-  }
-
-  private val managed =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[DataFrame])
-
-  /** Persist `df` (MEMORY_AND_DISK) and register it for release at
-    * [[invalidate]] — for operator-INTERNAL caches whose results are
-    * returned lazily: the operator cannot unpersist before returning
-    * (the caller hasn't run an action yet) and the caller never sees the
-    * frame, so lifecycle belongs to the session, like memoized
-    * intermediates. Re-invoking with the same input plan does not
-    * double-store (Spark's CacheManager recognizes the identical plan);
-    * distinct inputs accumulate only until the next invalidate.
-    */
-  def managedPersist(df: DataFrame): DataFrame = {
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    managed.add(df)
-    df
-  }
-
   /** Eagerly localCheckpoint an operator-INTERNAL intermediate and
-    * register its blocks for release at [[invalidate]] — the stronger
-    * sibling of [[managedPersist]] for frames consumed by CONCURRENT
-    * broadcast subqueries inside one build: a lazy persist only
-    * populates when first scanned, and Spark launches a plan's
-    * broadcast jobs in parallel, so every racer recomputes the full
-    * upstream pass (measured ~5 duplicate explode+decimal passes in
-    * pair_medians). A checkpoint is computed exactly once HERE, and
-    * every consumer — racing or not — reads the materialized leaf.
+    * register its blocks for release at [[releaseManaged]] — for frames
+    * consumed by CONCURRENT broadcast subqueries inside one build, or
+    * re-read by every round of an iterative loop: a lazy persist only
+    * populates when first scanned, and Spark launches a plan's broadcast
+    * jobs in parallel, so every racer recomputes the full upstream pass
+    * (measured ~5 duplicate explode+decimal passes in pair_medians). A
+    * checkpoint is computed exactly once HERE, and every consumer —
+    * racing or not — reads the materialized leaf.
     */
-  def managedCheckpoint(df: DataFrame): DataFrame = {
+  def managedCheckpoint(df: DataFrame): DataFrame = pin(df, passPins)
+
+  private def pin(df: DataFrame, scope: java.util.List[RDD[_]]): DataFrame = {
     val pinned = df.localCheckpoint(eager = true)
-    managed.add(pinned)
+    // a local checkpoint plans as one LogicalRDD leaf over the pinned RDD
+    scope.add(pinned.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd)
     pinned
+  }
+
+  /** Unpersist exactly the RDDs Memo pinned in `scope` — never a walk of
+    * a frame's plan: a derivation over a session memo (any text-family
+    * frame over `docs_spread`) embeds that memo's leaf, and freeing it
+    * with a pass would strand every later consumer on dropped blocks.
+    */
+  private def release(scope: java.util.List[RDD[_]]): Unit = scope.synchronized {
+    scope.forEach(_.unpersist(blocking = false))
+    scope.clear()
   }
 
   /** The pre-checkpoint QueryExecution of each memo derivation built
@@ -186,9 +179,8 @@ object Memo {
     * surface for the builds themselves (their checkpointed leaves hide
     * these shapes from every consumer query's plan).
     */
-  def builtQueryExecutions: Map[String, org.apache.spark.sql.execution.QueryExecution] = {
-    val snap = scala.collection.mutable.Map[
-      String, org.apache.spark.sql.execution.QueryExecution]()
+  def builtQueryExecutions: Map[String, QueryExecution] = {
+    val snap = scala.collection.mutable.Map[String, QueryExecution]()
     builtPlans.forEach((k, v) => snap(k) = v)
     snap.toMap
   }
@@ -206,28 +198,21 @@ object Memo {
     snap.toMap
   }
 
-  /** Drop all memoized intermediates (test isolation / memory release)
-    * AND unpersist their checkpoint blocks — clearing only the map would
-    * leave the eagerly-checkpointed RDDs pinned on executors until GC,
-    * so e.g. a bench warmup's blocks would still occupy memory during
-    * the timed pass.
+  /** End the session scope (test isolation / memory release): drop every
+    * memoized frame and model AND unpersist their checkpoint blocks —
+    * clearing only the map would leave the eagerly-checkpointed RDDs
+    * pinned on executors until GC, so e.g. a bench warmup's blocks would
+    * still occupy memory during the timed pass. Ends the pass scope too.
     */
   def invalidate(): Unit = {
-    cache.forEach((_, df) => releaseCheckpoint(df))
+    releaseManaged()
+    release(sessionPins)
     cache.clear()
-    modelCache.clear()
     builtPlans.clear()
-    managed.synchronized {
-      managed.forEach { df =>
-        df.unpersist(blocking = false) // persist()-pinned frames
-        releaseCheckpoint(df)          // managedCheckpoint frames
-      }
-      managed.clear()
-    }
     buildLocks.clear()
   }
 
-  /** Free every [[managedPersist]]/[[managedCheckpoint]] frame WITHOUT
+  /** End the pass scope: free every [[managedCheckpoint]] frame WITHOUT
     * touching the memo caches — the between-iterations cleanup a
     * benchmark or batch driver needs: per-call operator-internal
     * checkpoints are rebuilt on the next invocation anyway, but their
@@ -237,41 +222,5 @@ object Memo {
     * consuming actions have completed: frames returned lazily to a
     * caller still holding them would lose their blocks.
     */
-  def releaseManaged(): Unit = managed.synchronized {
-    managed.forEach { df =>
-      df.unpersist(blocking = false)
-      releaseCheckpoint(df)
-    }
-    managed.clear()
-  }
-
-  /** Immediately free a checkpointed (or persisted) frame an operator
-    * consumed EAGERLY inside its own build — the tight-lifecycle
-    * alternative to [[managedCheckpoint]]'s session-scoped release for
-    * frames that must not outlive a try/finally. `Dataset.unpersist`
-    * alone is a no-op on a localCheckpoint (the blocks belong to the
-    * internal RDD, not the CacheManager), which is why callers must not
-    * hand-roll this.
-    */
-  def release(df: DataFrame): Unit = {
-    df.unpersist(blocking = false)
-    releaseCheckpoint(df)
-  }
-
-  /** A locally-checkpointed Dataset's plan is a leaf `LogicalRDD` over
-    * the persisted internal RDD; unpersist exactly that RDD — the ROOT
-    * node only — to free its executor blocks. This must NOT walk the
-    * whole plan: a lazily-persisted managed frame's plan may EMBED other
-    * memos' checkpoint leaves (e.g. any text-family derivation over the
-    * session-shared docs_spread leaf), and unpersisting those through a
-    * per-call release strands every later consumer of the still-cached
-    * memo on dropped blocks (surfaced r15 as
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND mid-suite).
-    */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+  def releaseManaged(): Unit = release(passPins)
 }

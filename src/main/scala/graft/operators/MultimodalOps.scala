@@ -119,7 +119,7 @@ object MultimodalOps {
     // bands untouched); a larger radius would silently drop pairs
     require(maxHamming <= FpBands - 1,
       s"band scheme is exact only up to Hamming ${FpBands - 1}")
-    val fps = Memo.managedPersist(mediaRecords(documents)
+    val fps = Memo.managedCheckpoint(mediaRecords(documents)
       .select(col("doc_id"), col("media_type"),
         graft.functions.BlockHash.blockhash(col("payload")).as("fp"),
         md5(col("payload")).as("checksum"))

@@ -98,7 +98,8 @@ object Readers {
     pageSize match {
       // the body pins once (eager checkpoint): a consumer running
       // several jobs over the result must not re-GET a feed that may
-      // have drifted between them (same discipline as httpFetchCsv)
+      // have drifted between them (same discipline as httpFetchCsv);
+      // not a Memo pin: callers hold a feed past pass ends; GC frees it
       case None => normalize(fetchBodies(Seq(url)).localCheckpoint(true))
       case Some(n) =>
         val sep = if (url.contains("?")) "&" else "?"
@@ -132,7 +133,8 @@ object Readers {
               // serial action that populates the cache before the final
               // union consumes the page — and re-fetching the HTTP page
               // on recompute would be a correctness bug, which the
-              // immediate collect also prevents
+              // immediate collect also prevents. Call-scoped, not a Memo
+              // pin: the finally below frees every page
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             blocks += parsed
             // per-page census: ≤ parallelPages rows, bounded collect
@@ -169,6 +171,7 @@ object Readers {
             done = got < n.toLong * parallelPages
             block += 1
           }
+          // not a Memo pin: callers hold a feed past pass ends; GC frees it
           blocks.map(_.filter(col("arr").isNotNull)
               .select(explode(col("arr")).as("r")).select(col("r.*")))
             .reduce(_ unionByName _).localCheckpoint(true)
@@ -199,7 +202,8 @@ object Readers {
     // header probe and the scan are separate jobs, and schema inference
     // adds another — an unpinned lineage would hit the remote endpoint
     // per job, paying latency and risking a feed that drifted between
-    // reads
+    // reads. Not a Memo pin: callers hold a feed past pass ends; GC
+    // frees it
     val lines = spark.createDataset(Seq(url))
       // content-appropriate Accept: a Socrata-style endpoint picks its
       // serialization off this header, and asking a CSV path for JSON

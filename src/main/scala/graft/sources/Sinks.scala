@@ -53,7 +53,7 @@ object Sinks {
     // recompute the full input lineage. Lazy persist is SAFE here
     // (audited round 14, no racing-scan pathology): the census count()
     // is a serial action that fully populates the cache before the
-    // write action runs
+    // write action runs. Call-scoped, not a Memo pin: the finally frees it
     val cached = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
       // Long math + a writer-count ceiling: .toInt on the raw count

@@ -12,14 +12,8 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(
-      org.apache.spark.sql.SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    GraftSession.register(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus, cpus)
     spark.sparkContext.setLogLevel("WARN")
     // warmup pass (JIT + parquet footers), then invalidate and re-time
     names.foreach(n => SparkEntry.queries(n)(spark, dir).count())
@@ -40,9 +34,8 @@ object ProfileQuery {
               i.name.takeWhile(_ != '\n'))
         }
       })
-    // SPARK_GRAFT_PROFILE_COLD=1: drop ALL cached data (including raw
-    // operator persists, which Memo.invalidate does not know about)
-    // before each timed query — the mode that exposes racing-scan
+    // SPARK_GRAFT_PROFILE_COLD=1: drop ALL cached data (catalog cache
+    // and every Memo pin) before each timed query — the mode that exposes racing-scan
     // recomputes of lazily-persisted frames, which a warm cache hides
     val cold = sys.env.get("SPARK_GRAFT_PROFILE_COLD").contains("1")
     names.foreach { n =>

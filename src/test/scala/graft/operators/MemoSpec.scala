@@ -4,7 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Memo contract: re-entrant builds are legal, keys never collide across
-  * distinct inputs, and invalidate() releases the checkpoint blocks.
+  * distinct inputs, invalidate() releases the checkpoint blocks, and
+  * releaseManaged() releases every pin an operator call made.
   */
 class MemoSpec extends SparkSpec {
   import spark.implicits._
@@ -92,5 +93,50 @@ class MemoSpec extends SparkSpec {
     assert(t.keySet == Set("memospec_t_outer", "memospec_t_inner"))
     assert(t.values.forall(_ >= 0.0))
     assert(Memo.drainBuildSeconds().isEmpty) // drained
+    // a model build re-entering a frame memo: both names report, and the
+    // model's seconds exclude the (deliberately slow) inner build, so the
+    // two sum to no more than the wall time of the outer call
+    val t0 = System.nanoTime()
+    Memo.cachedModel("memospec_t_model", Seq(in)) {
+      Memo.cached("memospec_t_model_inner", in) { df =>
+        Thread.sleep(500); df.filter(col("x") > 1)
+      }.collect()
+    }
+    val wall = (System.nanoTime() - t0) / 1e9
+    val m = Memo.drainBuildSeconds()
+    assert(m.keySet == Set("memospec_t_model", "memospec_t_model_inner"))
+    assert(m("memospec_t_model_inner") >= 0.5)
+    assert(m.values.forall(_ >= 0.0) && m.values.sum <= wall,
+      s"inner build seconds counted twice: $m within $wall s")
+  }
+
+  test("operator pins are pass-scoped: releaseManaged frees what the calls pinned") {
+    val sc = spark.sparkContext
+    val nation = Seq((0, "A"), (1, "B")).toDF("n_nationkey", "n_name")
+    val supplier = Seq((10L, 0)).toDF("s_suppkey", "s_nationkey")
+    val customer = Seq((20L, 1)).toDF("c_custkey", "c_nationkey")
+    val orders = Seq((30L, 20L)).toDF("o_orderkey", "o_custkey")
+    val lineitem = Seq((30L, 10L)).toDF("l_orderkey", "l_suppkey")
+    val docs = (1L to 16L).map { i =>
+      val t = if (i % 2 == 0) s"tiny doc $i"
+        else ("the quick brown fox jumps over the lazy dog and runs " * 3).trim
+      (i, t, "en", "src", t.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+    def run(): Unit = {
+      assert(GraphOps.nationTradePagerank(lineitem, orders, customer,
+        supplier, nation).collect().length == 2)
+      assert(ClassifierOps.qualityClassifierScore(docs).head()
+        .getAs[Long]("n_docs") == 16L)
+    }
+    // the first call builds the session memos (the trade edge list, the
+    // trained weights); they stay, so the snapshot is taken after it
+    run()
+    Memo.releaseManaged()
+    val before = sc.getPersistentRDDs.keySet
+    run()
+    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty)
+    Memo.releaseManaged()
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"blocks survived releaseManaged: $left")
   }
 }
