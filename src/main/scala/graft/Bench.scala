@@ -56,7 +56,7 @@ object Bench {
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus, cpus)
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // optional subset: `runMain graft.Bench q1 q2` re-times named
     // queries only (regression adjudication) — the driver passes none

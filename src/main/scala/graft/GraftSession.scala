@@ -10,7 +10,11 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Apply graft defaults + function registration to an existing builder. */
+  /** Apply graft defaults + function registration to an existing builder.
+    * A session built with `configure` alone should also set
+    * `spark.sql.shuffle.partitions`: every shuffle graft places by hand
+    * takes that width (`operators.OpUtils.spread`).
+    */
   def configure(builder: SparkSession.Builder): SparkSession.Builder =
     builder
       // Catalyst rule injection (geohash-prefix → bounding-box pushdown)
@@ -34,12 +38,13 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft-warehouse")
 
-  def local(cores: Int = 32, shufflePartitions: Int = 32): SparkSession = {
+  /** A `local[cores]` session whose shuffle width equals the core count. */
+  def local(cores: Int = 32): SparkSession = {
     val spark = configure(
       SparkSession.builder()
         .master(s"local[$cores]")
         .appName("graft")
-        .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+        .config("spark.sql.shuffle.partitions", cores.toString)
         .config("spark.ui.enabled", "false")
     ).getOrCreate()
     register(spark)

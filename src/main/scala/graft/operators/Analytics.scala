@@ -907,10 +907,7 @@ object Analytics {
     // distinct's clustering, min over DISTINCT weeks equals min over
     // all weeks, and both the groupBy and the self-join reuse the
     // partitioning
-    val wd = weeks
-      .repartition(events.sparkSession.sparkContext.defaultParallelism,
-        col("user_id"))
-      .distinct()
+    val wd = OpUtils.spread(weeks, col("user_id")).distinct()
     val cohorts = wd.groupBy(col("user_id")).agg(min(col("week")).as("cohort_week"))
     wd
       .join(cohorts, Seq("user_id"))
@@ -1635,18 +1632,8 @@ object Analytics {
         col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(nation.select("n_nationkey", "n_name")),
         col("s_nationkey") === col("n_nationkey"))
-      // user-origin repartition on the full grouping key: the rollup's
-      // ENSURE exchange carries ~350k narrow rows, so AQE coalesced it
-      // to ONE partition and the final agg ran single-task (profiled
-      // ~0.5 s on one core). The agg reuses this partitioning at
-      // defaultParallelism; nation alone would also satisfy the
-      // clustering but caps the fact-sized shuffle at |nations| tasks —
-      // wrong at real scale. (Cost: the user exchange moves raw join
-      // rows instead of the map-side partials; rows-per-(nation,part)
-      // is ~1.7 at any TPC-H SF, so the byte delta is bounded while the
-      // parallelism win is a core-count factor.)
-      .repartition(lineitem.sparkSession.sparkContext.defaultParallelism,
-        col("n_name"), col("l_partkey"))
+      // the agg reuses this; unspread: one task, 0.5 s; nation alone caps it at |nations| tasks
+      .transform(OpUtils.spread(_, col("n_name"), col("l_partkey")))
       .groupBy(col("n_name").as("nation"), col("l_partkey"))
       .agg(sum(value).as("part_value"))
     // nation total as a window over the grouped (nation, part) output —
@@ -1655,12 +1642,8 @@ object Analytics {
     // a second agg + join-back would re-derive the fact rollup twice
     // whenever exchange reuse misses
     val w = Window.partitionBy(col("nation"))
-    perPart
-      // second user repartition for the window: its ENSURE exchange on
-      // nation is part-grain-tiny and coalesced to one task too; window
-      // parallelism is inherently |nations|-bounded, which this restores
-      .repartition(lineitem.sparkSession.sparkContext.defaultParallelism,
-        col("nation"))
+    // the window reuses this; unspread: one task; |nations|-bounded
+    OpUtils.spread(perPart, col("nation"))
       .withColumn("nation_value", sum(col("part_value")).over(w))
       .withColumn("n_parts", count(lit(1)).over(w))
       // share ≥ meanMult/n_parts, cross-multiplied: exact decimal × long

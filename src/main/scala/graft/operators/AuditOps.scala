@@ -69,14 +69,8 @@ object AuditOps {
       pdf.select(lit(rel).as("rel"), col(pk).cast("long").as("k")).distinct()
         .withColumn("hit", lit(1))
     }.reduce(_.unionByName(_))
-    val joined = childKeys
-      // user-origin repartition on the join key: the full-outer's ENSURE
-      // exchanges are byte-tiny (long keys) and AQE coalesced them to
-      // ONE partition, running the join + audit agg over the whole
-      // keyset single-task (profiled 0.9 s on one core); the join and
-      // the rel-grain partial agg reuse this partitioning at any SF
-      .repartition(lineitem.sparkSession.sparkContext.defaultParallelism,
-        col("rel"), col("k"))
+    // the join and the partial agg reuse this; unspread: one task, 0.9 s
+    val joined = OpUtils.spread(childKeys, col("rel"), col("k"))
       .join(parentKeys, Seq("rel", "k"), "full_outer")
     // BOTH audits in one conditional aggregation over the joined keyset:
     // two filtered groupBys consumed the full-outer join from two
@@ -283,23 +277,13 @@ object AuditOps {
       // finally's release point, once for the Memo wrapper's checkpoint
       // — two ~1.7 s scans of the 262k-pair result at sf0.1)
       val hashed = Memo.managedCheckpoint(OpUtils.spread(keys))
-      // explicit user-origin repartition on the join key: the variant
-      // self-join's ENSURE exchanges are byte-tiny and AQE-coalesce to
-      // ONE partition, which ran the join + partial pair-dedup
-      // single-task (profiled 1.46 s on one core)
-      val par = customer.sparkSession.sparkContext.defaultParallelism
-      val cands = hashed.select(col("h"), col("id").as("id_a"))
-        .repartition(par, col("h"))
+      // the self-join reuses this; unspread: one task, 1.46 s
+      val cands = OpUtils.spread(hashed.select(col("h"), col("id").as("id_a")), col("h"))
         .join(hashed.select(col("h"), col("id").as("id_b")), Seq("h"))
         .filter(col("id_a") < col("id_b"))
         .select("id_a", "id_b")
-        // user-origin hash repartition on the pair key: the distinct's
-        // ENSURE exchange is byte-tiny and its final agg AQE-coalesced to
-        // ONE task (profiled 1.15 s on one core); the distinct reuses
-        // this partitioning (same keys), so the dedup AND the levenshtein
-        // verify downstream keep defaultParallelism tasks at any SF —
-        // the name/nation attach joins broadcast the dim-sized side
-        .repartition(par, col("id_a"), col("id_b"))
+        // the distinct and the levenshtein verify reuse this; unspread: one task, 1.15 s
+        .transform(OpUtils.spread(_, col("id_a"), col("id_b")))
         .distinct()
       cands
         .join(names.select(col("id").as("id_a"), col("nat").as("nat_a"),

@@ -360,14 +360,8 @@ object DedupOps {
     prefix
       .join(kept.select(col("x"), col("doc_id").as("doc_big")), Seq("x"))
       .filter(col("doc_small") =!= col("doc_big"))
-      // user-origin repartition before the dedup: the distinct's output
-      // is byte-tiny and AQE-coalesced to ONE partition, so the Memo
-      // wrapper's checkpoint landed single-partition and every consumer
-      // scan of the pair list (the size-prune join feeding the verify)
-      // ran single-task (profiled 1.34 s on one core); the distinct
-      // reuses this partitioning and the checkpoint stays spread
-      .repartition(documents.sparkSession.sparkContext.defaultParallelism,
-        col("doc_small"), col("doc_big"))
+      // the distinct and the Memo checkpoint reuse this; unspread: one task per scan, 1.34 s
+      .transform(spread(_, col("doc_small"), col("doc_big")))
       // no trailing persist: the Memo wrapper eagerly checkpoints this
       .select("doc_small", "doc_big").distinct()
   }
@@ -402,15 +396,8 @@ object DedupOps {
     pruned
       .join(dsC.select(col("doc_id").as("doc_small"), col("xs").as("xs_s")),
         Seq("doc_small"))
-      // explicit (user-origin) repartition between the two array joins:
-      // the ENSURE_REQUIREMENTS exchange feeding the doc_big join is
-      // byte-tiny and AQE-coalesces to ONE partition, which ran the
-      // whole array_intersect verify single-task (profiled 3.1 s on one
-      // core); a user repartition is exempt from coalescing and the
-      // join reuses its partitioning, so the verify keeps
-      // defaultParallelism tasks at any SF
-      .repartition(documents.sparkSession.sparkContext.defaultParallelism,
-        col("doc_big"))
+      // the doc_big join and the verify reuse this; unspread: one task, 3.1 s
+      .transform(spread(_, col("doc_big")))
       .join(dsC.select(col("doc_id").as("doc_big"), col("xs").as("xs_b")),
         Seq("doc_big"))
       .select(col("doc_small"), col("doc_big"),
@@ -590,12 +577,12 @@ object DedupOps {
     * (a 5 000-node path took ~1 000 rounds of 2 hops); with it, rounds
     * grow with log(nodes) (14 for that path, 7 for er_clusters at sf0.1).
     *
-    * The adjacency is hash-partitioned once (width = the session's
-    * `spark.sql.shuffle.partitions`) and never reshuffles. A round is
-    * one Spark job: its changed-label count is the action that
-    * materializes its local checkpoint; the previous round's blocks go
-    * once the next round is pinned, and the final labels are handed to
-    * [[Memo.managedCheckpoint]] (freed by `Memo.releaseManaged()`).
+    * The adjacency is hash-partitioned once (at [[OpUtils.width]]) and
+    * never reshuffles. A round is one Spark job: its changed-label count
+    * is the action that materializes its local checkpoint; the previous
+    * round's blocks go once the next round is pinned, and the final labels
+    * are handed to [[Memo.managedCheckpoint]] (freed by
+    * `Memo.releaseManaged()`).
     * Several steps per job measured slower at sf0.1 (er_clusters 3.2–3.6
     * s at one step, 3.8–4.1 s at two or four).
     */
@@ -603,7 +590,7 @@ object DedupOps {
     val spark = pairs.sparkSession
     import spark.implicits._
     val idType = pairs.schema.head.dataType
-    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val part = new HashPartitioner(OpUtils.width(spark))
     // RDD-level pins, not Memo pins: Memo pins DataFrames, and the loop
     // frees each round's blocks itself once the next round is pinned
     val adj = pairs.select(pairs.columns.map(col(_).cast("long")).toSeq: _*).rdd

@@ -45,14 +45,8 @@ object GraphOps {
           col("l_suppkey") === col("s_suppkey"))
         .join(n, col("s_nationkey") === col("n_nationkey"))
         .select(col("l_orderkey"), col("n_name").as("src"))
-        // user-origin repartition on the JOIN key: orderkey alone
-        // satisfies the distinct's (orderkey, src) clustering, and the
-        // fact-fact join below reuses the same partitioning — ONE
-        // shuffle of the line side instead of two (distinct exchange +
-        // join exchange), at defaultParallelism instead of whatever the
-        // byte-based coalescer picks for tiny bench inputs
-        .repartition(lineitem.sparkSession.sparkContext.defaultParallelism,
-          col("l_orderkey"))
+        // the distinct and the fact-fact join below reuse this: one line-side shuffle, not two
+        .transform(OpUtils.spread(_, col("l_orderkey")))
         .distinct()
       val orderSide = orders.select(col("o_orderkey"), col("o_custkey"))
         .join(customer.select("c_custkey", "c_nationkey"),

@@ -1,17 +1,34 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 private[graft] object OpUtils {
-  /** Spread a (possibly single-split) input across all cores before a
-    * CPU-dense per-row stage — on a cluster, upstream files usually give
-    * enough splits, but a scan with fewer splits than cores would
-    * otherwise serialize the hashing work on one task.
+  /** Width of every shuffle graft places by hand: the session's
+    * `spark.sql.shuffle.partitions`, the one width setting a deployer
+    * sizes for the cluster (graft's sessions set it to the core count).
     */
-  def spread(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+  def width(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
+
+  /** A hand-placed exchange of [[width]] partitions: round-robin with no
+    * `keys`, hash-partitioned on `keys` otherwise.
+    *
+    * The explicit partition count is the point. It makes the exchange a
+    * `REPARTITION_BY_NUM`, which AQE's `CoalesceShufflePartitions` never
+    * coalesces. Graft's sessions coalesce size-first, so a shuffle that
+    * is small in BYTES but heavy in per-row work (array verifies, windows
+    * over narrow rows, joins of long keys) would otherwise run as one
+    * task. Downstream joins, aggregates and windows on the same keys
+    * reuse this partitioning instead of adding an exchange of their own.
+    * With no keys it also spreads a scan with fewer splits than cores
+    * before a CPU-dense per-row stage.
+    */
+  def spread(df: DataFrame, keys: Column*): DataFrame = {
+    val n = width(df.sparkSession)
+    if (keys.isEmpty) df.repartition(n) else df.repartition(n, keys: _*)
+  }
 
   /** [[spread]] of the documents table, memoized per session per input:
     * ~20 text-family operators each paid their OWN single-task read of
@@ -26,7 +43,7 @@ private[graft] object OpUtils {
     * pass is the only full-text materialization of the session.
     */
   def spreadDocs(df: DataFrame): DataFrame =
-    Memo.cached("docs_spread", df)(spread)
+    Memo.cached("docs_spread", df)(spread(_))
 
   // NOTE (round 14): a data-sized-partitioning helper (eager checkpoint
   // + count + coalesce to rows/2000 tasks) was built and measured on the
@@ -348,13 +365,8 @@ private[graft] object OpUtils {
       o.select(col("o_orderpriority").as("grp"),
           floor(col("o_totalprice")).cast("long").as("usd"))
         .groupBy(col("grp"), col("usd")).agg(count(lit(1)).as("n"))
-        // user-origin repartition on grp: the windows' ENSURE exchange
-        // over the ~145k-row grain is byte-tiny and AQE-coalesced to ONE
-        // task (profiled serial 0.2-0.7 s stages); both windows reuse
-        // this partitioning — parallelism is |priorities|-bounded, the
-        // operator's inherent grain
-        .repartition(o.sparkSession.sparkContext.defaultParallelism,
-          col("grp"))
+        // both windows reuse this; unspread: one task, 0.2-0.7 s; |priorities|-bounded
+        .transform(spread(_, col("grp")))
         .withColumn("cum", sum(col("n")).over(grpW.orderBy(col("usd"))))
         .withColumn("total", sum(col("n")).over(grpW))
     }

@@ -47,14 +47,8 @@ object SkylineOps {
     // RANGE frame (partitions parallelize with the buckets)
     val wIn = Window.partitionBy(col("bucket")).orderBy(col("price_cents"))
       .rangeBetween(Window.unboundedPreceding, -1)
-    rows
-      // user-origin repartition on the window key: the window's ENSURE
-      // exchange is ~17 MB at sf0.1, so AQE coalesced it to ONE
-      // partition and the whole fact-sized window ran single-task
-      // (profiled 1.07 s on one core); the window reuses this
-      // partitioning, keeping defaultParallelism tasks at any SF
-      .repartition(lineitem.sparkSession.sparkContext.defaultParallelism,
-        col("bucket"))
+    // the fact-sized window reuses this; unspread: one task, 1.07 s
+    OpUtils.spread(rows, col("bucket"))
       .withColumn("in_bucket_max_qty", max(col("qty")).over(wIn))
       .join(broadcast(bucketMax), col("bucket") === col("b"))
       // greatest() skips nulls; both-null (globally cheapest row) keeps

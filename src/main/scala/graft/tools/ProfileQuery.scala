@@ -13,7 +13,7 @@ object ProfileQuery {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus, cpus)
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // warmup pass (JIT + parquet footers), then invalidate and re-time
     names.foreach(n => SparkEntry.queries(n)(spark, dir).count())

@@ -5,5 +5,5 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (one per suite, lazily created). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
+  lazy val spark: SparkSession = GraftSession.local(cores = 4)
 }
