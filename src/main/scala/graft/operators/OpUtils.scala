@@ -51,18 +51,6 @@ private[graft] object OpUtils {
   // (the loops' cost is per-job driver latency, not per-task overhead),
   // so it was reverted rather than kept as an unearned complication.
 
-  /** Exact quantile bucketing via the distinct-value CDF — the
-    * scale-safe substitute for a global ntile (which would
-    * single-partition-sort every ROW): group rows by value, cumulative-
-    * sum counts over the DISTINCT-value table only, and assign
-    * bucket = ⌊(first_rank−1)·k / N⌋ + 1, so a tie group lands wholly in
-    * its first member's bucket (deterministic without a per-row total
-    * order). Returns the distinct-value table (valueCol, n, bucket).
-    * Callers must quantize continuous domains first (floor to
-    * dollars/micro-units) or the distinct table is corpus-sized.
-    * Shared by perplexity_buckets and order_value_deciles — one
-    * definition of the quantile semantics, not two.
-    */
   /** Cumulative sum of `weightCol` in `valueCol` order over a
     * DISTINCT-VALUE-grain table, in TWO bounded window levels (the
     * theil_sen_cdf / skyline pattern): values range-bucket into ≤1025
@@ -371,6 +359,18 @@ private[graft] object OpUtils {
         .withColumn("total", sum(col("n")).over(grpW))
     }
 
+  /** Exact quantile bucketing via the distinct-value CDF — the
+    * scale-safe substitute for a global ntile (which would
+    * single-partition-sort every ROW): group rows by value, cumulative-
+    * sum counts over the DISTINCT-value table only, and assign
+    * bucket = ⌊(first_rank−1)·k / N⌋ + 1, so a tie group lands wholly in
+    * its first member's bucket (deterministic without a per-row total
+    * order). Returns the distinct-value table (valueCol, n, bucket).
+    * Callers must quantize continuous domains first (floor to
+    * dollars/micro-units) or the distinct table is corpus-sized.
+    * Shared by perplexity_buckets and order_value_deciles — one
+    * definition of the quantile semantics, not two.
+    */
   def cdfBuckets(df: DataFrame, valueCol: String, buckets: Int): DataFrame = {
     // ONE pass of the caller's input: the grand total rides the SAME
     // global window as the cumulative (an unbounded frame — Σn ≡

@@ -363,16 +363,12 @@ object Readers {
   def readCommitted(spark: SparkSession, path: String): DataFrame = {
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifest = new org.apache.hadoop.fs.Path(dir, "_manifest")
+    val manifest = new org.apache.hadoop.fs.Path(dir, Snapshots.Manifest)
     if (!fs.exists(manifest))
       throw new java.io.FileNotFoundException(
-        s"$path has no _manifest — not a committed dataset")
-    val in = fs.open(manifest)
-    val names =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).toList
-      finally in.close()
-    val files = names.map(n => new org.apache.hadoop.fs.Path(dir, n).toString)
+        s"$path has no ${Snapshots.Manifest} — not a committed dataset")
+    val files = Snapshots.lines(fs, manifest)
+      .map(n => new org.apache.hadoop.fs.Path(dir, n).toString)
     spark.read.parquet(files: _*)
   }
 
@@ -452,15 +448,11 @@ object Readers {
       lo: Long, hi: Long): (Seq[String], Int) = {
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statsPath = new org.apache.hadoop.fs.Path(dir, "_stats")
+    val statsPath = new org.apache.hadoop.fs.Path(dir, Snapshots.Stats)
     if (!fs.exists(statsPath))
       throw new java.io.FileNotFoundException(
-        s"$path has no _stats sidecar — not a stats-committed dataset")
-    val in = fs.open(statsPath)
-    val rows =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map(_.split("\t", -1)).toList
-      finally in.close()
+        s"$path has no ${Snapshots.Stats} sidecar — not a stats-committed dataset")
+    val rows = Snapshots.lines(fs, statsPath).map(_.split("\t", -1))
     val byFile = rows.filter(_(1) == column)
     // an EMPTY dataset commits a row-less sidecar: zero files selected —
     // readSkipping then returns its documented empty frame. But a column
@@ -468,7 +460,7 @@ object Readers {
     // contract error: silently selecting zero files would be silent
     // total data loss, so that still throws.
     require(rows.isEmpty || byFile.nonEmpty,
-      s"_stats carries no zone for column $column")
+      s"${Snapshots.Stats} carries no zone for column $column")
     val keep = byFile.filter { a =>
       a(2).isEmpty || a(3).isEmpty ||
         !(a(3).toLong < lo || a(2).toLong > hi)

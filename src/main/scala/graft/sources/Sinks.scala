@@ -143,28 +143,6 @@ object Sinks {
     t.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(t)
   }
 
-  /** The staging two-rename swap shared by the parquet-store MERGE
-    * family, on the STORE's own filesystem (hdfs:// and s3a:// included
-    * — a driver-local java.nio move under a remote store path is
-    * invalid or silently rearranges local disk): retire the current
-    * dir, move staging in, delete the retired copy. Every step THROWS
-    * on failure; a crash between the renames leaves a -retired dir that
-    * demands manual repair (the SCD2 stream documents the same
-    * contract — a Delta/Iceberg MERGE is the transactional form).
-    */
-  private def swapStore(spark: org.apache.spark.sql.SparkSession,
-      path: String, staging: String, token: Long): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val retired = new org.apache.hadoop.fs.Path(s"$path-retired-$token")
-    if (fs.exists(target) && !fs.rename(target, retired))
-      throw new java.io.IOException(s"store swap: retire rename failed for $path")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staging), target))
-      throw new java.io.IOException(s"store swap: staging rename failed for $staging")
-    if (fs.exists(retired) && !fs.delete(retired, true))
-      throw new java.io.IOException(s"store swap: retired delete failed for $retired")
-  }
-
   /** Batch MERGE (upsert) into a parquet store by key: update rows
     * replace matching keys, new keys append, untouched rows carry
     * forward — the parquet-only MERGE INTO shape (a Delta/Iceberg MERGE
@@ -184,10 +162,7 @@ object Sinks {
         current.join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
           .unionByName(updates)
       } else updates
-    val token = System.nanoTime()
-    val staging = s"$path-staging-$token"
-    merged.write.mode(SaveMode.Overwrite).parquet(staging)
-    swapStore(spark, path, staging, token)
+    Snapshots.rewriteStore(path, merged)(_ => ())
   }
 
   /** Apply a classified CDC delta (the [[graft.operators.ChangeOps]]
@@ -221,10 +196,7 @@ object Sinks {
         current.join(changes.select(col(keyCol)), Seq(keyCol), "left_anti")
           .unionByName(payload)
       } else payload
-    val token = System.nanoTime()
-    val staging = s"$path-staging-$token"
-    merged.write.mode(SaveMode.Overwrite).parquet(staging)
-    swapStore(spark, path, staging, token)
+    Snapshots.rewriteStore(path, merged)(_ => ())
   }
 
   /** Incremental AGGREGATE maintenance — the materialized-view merge:
@@ -251,20 +223,17 @@ object Sinks {
           .agg(sumCols.map(c => sum(col(c)).as(c)).head,
             sumCols.map(c => sum(col(c)).as(c)).tail: _*)
       else pre
-    val token = System.nanoTime()
-    val staging = s"$path-staging-$token"
-    merged.write.mode(SaveMode.Overwrite).parquet(staging)
     // the commit tag rides INSIDE the staged directory, so tag and data
     // publish in the same swap — an ADDITIVE merge cannot be made
     // idempotent by any marker written after the swap (a crash between
     // the two re-applies the batch on replay and double-counts). The
     // underscore prefix keeps parquet readers blind to it.
-    commitTag.foreach { tag =>
-      val p = new org.apache.hadoop.fs.Path(staging, s"_commit-$tag")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.create(p, true).close()
+    Snapshots.rewriteStore(path, merged) { staging =>
+      commitTag.foreach { tag =>
+        val p = Snapshots.commitTagPath(staging, tag)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true).close()
+      }
     }
-    swapStore(spark, path, staging, token)
   }
 
   /** The commit tag the store's last [[mergeAggregate]] swap carried, if
@@ -275,11 +244,8 @@ object Sinks {
   def storeCommitTag(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[String] = {
     val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) None
-    else fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .collectFirst { case n if n.startsWith("_commit-") =>
-        n.stripPrefix("_commit-") }
+    Snapshots.commitTag(
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
   }
 
   /** EXACTLY-ONCE append of one micro-batch into a snapshot directory:
@@ -297,32 +263,9 @@ object Sinks {
     */
   def appendSnapshotOnce(spark: org.apache.spark.sql.SparkSession,
       path: String, df: DataFrame, streamId: String, batchId: Long): Boolean = {
-    require(streamId.nonEmpty && streamId.matches("[A-Za-z0-9_.=-]+"),
-      s"streamId must be a plain token, got '$streamId'")
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir)
-    val gen = f"ingest-$streamId-b$batchId%010d-"
-    val committed = Snapshots.versions(fs, dir)
-      .flatMap(v => Snapshots.files(fs, dir, v))
-      .exists(_.startsWith(gen))
-    if (committed) return false
-    clearCrashedGeneration(fs, dir, gen)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".$gen")
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val parts = fs.listStatus(tmp).iterator.map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).toSeq.sortBy(_.getName)
-    // an empty batch has nothing to publish — don't burn a version on it
-    // (its replay is another harmless no-op)
-    if (parts.isEmpty) { fs.delete(tmp, true); return true }
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val n = f"$gen%sp$i%04d.parquet"
-      if (!fs.rename(p, new org.apache.hadoop.fs.Path(dir, n)))
-        throw new java.io.IOException(s"ingest rename failed for $p")
-    }
-    fs.delete(tmp, true)
-    commitSnapshot(spark, path)
-    true
+    Snapshots.requireToken(streamId, s"streamId must be a plain token, got '$streamId'")
+    appendOnce(spark, path, df, Snapshots.batchGen("ingest", streamId, batchId),
+      "ingest", emptyCommits = false)
   }
 
   /** [[appendSnapshotOnce]] keyed by a STRING window id instead of a
@@ -337,33 +280,34 @@ object Sinks {
   def appendWindowOnce(spark: org.apache.spark.sql.SparkSession,
       path: String, df: DataFrame, streamId: String,
       windowId: String): Boolean = {
-    require(streamId.nonEmpty && streamId.matches("[A-Za-z0-9_.=-]+"),
-      s"streamId must be a plain token, got '$streamId'")
-    require(windowId.nonEmpty && windowId.matches("[A-Za-z0-9_.=-]+"),
-      s"windowId must be a plain token, got '$windowId'")
+    Snapshots.requireToken(streamId, s"streamId must be a plain token, got '$streamId'")
+    Snapshots.requireToken(windowId, s"windowId must be a plain token, got '$windowId'")
+    appendOnce(spark, path, df, Snapshots.windowGen(streamId, windowId),
+      "window ingest", emptyCommits = true)
+  }
+
+  /** The body both exactly-once appends share: false (no-op) when a
+    * part of generation `gen` already appears in manifest history,
+    * otherwise stage the generation in and commit one snapshot. An
+    * empty frame commits nothing unless `emptyCommits`, in which case
+    * it commits a schema-only sentinel part.
+    */
+  private def appendOnce(spark: org.apache.spark.sql.SparkSession,
+      path: String, df: DataFrame, gen: String, what: String,
+      emptyCommits: Boolean): Boolean = {
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(dir)
-    val gen = s"ingest-$streamId-w$windowId-"
-    val genFile = java.util.regex.Pattern.compile(
-      java.util.regex.Pattern.quote(gen) + "p\\d{4}\\.parquet")
     val committed = Snapshots.versions(fs, dir)
       .flatMap(v => Snapshots.files(fs, dir, v))
-      .exists(n => genFile.matcher(n).matches())
+      .exists(Snapshots.inGeneration(gen, _))
     if (committed) return false
-    // crash-mid-append leftovers of THIS window only (full-name match)
-    fs.listStatus(dir).iterator.map(_.getPath)
-      .filter(p => genFile.matcher(p.getName).matches())
-      .foreach { p =>
-        if (!fs.delete(p, false))
-          throw new java.io.IOException(s"window replay cleanup failed for $p")
-      }
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".$gen")
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    def listParts() = fs.listStatus(tmp).iterator.map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).toSeq.sortBy(_.getName)
-    var parts = listParts()
-    if (parts.isEmpty) {
+    def stage(frame: DataFrame) = Snapshots.stageGeneration(fs, dir, gen, what)(
+      tmp => frame.write.mode(SaveMode.Overwrite).parquet(tmp.toString))
+    if (stage(df).isEmpty) {
+      // an empty batch has nothing to publish — don't burn a version on
+      // it (its replay is another harmless no-op)
+      if (!emptyCommits) return true
       // a legitimately-EMPTY window must still COMMIT: returning early
       // here left no committed record, so backfillWindows re-fetched
       // (and re-reported) the window on every replay — the documented
@@ -371,19 +315,10 @@ object Sinks {
       // zero-row sentinel part instead: repartition(1) guarantees one
       // writer task → one empty parquet file carrying the schema, which
       // the committed check matches like any other generation file.
-      df.limit(0).repartition(1).write.mode(SaveMode.Overwrite)
-        .parquet(tmp.toString)
-      parts = listParts()
-      if (parts.isEmpty)
+      if (stage(df.limit(0).repartition(1)).isEmpty)
         throw new java.io.IOException(
-          s"empty-window sentinel write produced no part under $tmp")
+          s"empty-window sentinel write produced no part under $dir")
     }
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val n = f"$gen%sp$i%04d.parquet"
-      if (!fs.rename(p, new org.apache.hadoop.fs.Path(dir, n)))
-        throw new java.io.IOException(s"window ingest rename failed for $p")
-    }
-    fs.delete(tmp, true)
     commitSnapshot(spark, path)
     true
   }
@@ -429,22 +364,16 @@ object Sinks {
       fetch: (org.apache.spark.sql.SparkSession, String) => DataFrame,
       windowCol: String = "window"): Seq[String] = {
     import org.apache.spark.sql.functions.lit
-    require(streamId.nonEmpty && streamId.matches("[A-Za-z0-9_.=-]+"),
-      s"streamId must be a plain token, got '$streamId'")
+    Snapshots.requireToken(streamId, s"streamId must be a plain token, got '$streamId'")
     windows.foreach { case (w, _) =>
-      require(w.nonEmpty && w.matches("[A-Za-z0-9_.=-]+"),
-        s"windowId must be a plain token, got '$w'") }
+      Snapshots.requireToken(w, s"windowId must be a plain token, got '$w'") }
     val dir = new org.apache.hadoop.fs.Path(rawPath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val seen: Set[String] =
-      if (!fs.exists(dir)) Set.empty
-      else Snapshots.versions(fs, dir)
-        .flatMap(v => Snapshots.files(fs, dir, v)).toSet
+    val seen: Set[String] = Snapshots.versions(fs, dir)
+      .flatMap(v => Snapshots.files(fs, dir, v)).toSet
     val missing = windows.filterNot { case (w, _) =>
-      val genFile = java.util.regex.Pattern.compile(
-        java.util.regex.Pattern.quote(s"ingest-$streamId-w$w-") +
-          "p\\d{4}\\.parquet")
-      seen.exists(n => genFile.matcher(n).matches())
+      val gen = Snapshots.windowGen(streamId, w)
+      seen.exists(Snapshots.inGeneration(gen, _))
     }
     missing.map { case (w, source) =>
       val rows = fetch(spark, source).withColumn(windowCol, lit(w))
@@ -529,12 +458,7 @@ object Sinks {
     // prior committed snapshot survives a crash at any point before the
     // swap (Overwrite-in-place destroyed it before the new write was
     // durable), and the swap moves data and manifest together
-    val token = System.nanoTime()
-    val staging = s"$path-staging-$token"
-    df.write.mode(SaveMode.Overwrite).parquet(staging)
-    val n = publishManifest(spark, staging)
-    swapStore(spark, path, staging, token)
-    n
+    Snapshots.rewriteStore(path, df)(staging => publishManifest(spark, staging.toString))
   }
 
   /** (Re)publish `_manifest` from the parquet files currently in `path`
@@ -545,47 +469,11 @@ object Sinks {
       path: String): Int = {
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val names = {
-      val it = fs.listStatus(dir).iterator
-      it.map(_.getPath.getName)
-        .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
-        .toSeq.sorted
-    }
-    val tmp = new org.apache.hadoop.fs.Path(dir, "._manifest.tmp")
-    val out = fs.create(tmp, true)
-    try out.write((names.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    val manifest = new org.apache.hadoop.fs.Path(dir, "_manifest")
-    // overwrite-rename: delete-then-rename would leave a window where a
-    // committed dataset reads as uncommitted
-    overwriteRename(spark, fs.makeQualified(tmp), fs.makeQualified(manifest))
+    val names = Snapshots.dataFiles(fs, dir)
+    Snapshots.publishText(fs, new org.apache.hadoop.fs.Path(dir, Snapshots.Manifest),
+      names, overwrite = true)
     names.size
   }
-
-  /** Delete leftover generation files of an UNPUBLISHED version — a
-    * prior compaction/replacement attempt that crashed after renaming
-    * some parts in. Safe because the version has no manifest: nothing
-    * references the files, and leaving them would both break the retry
-    * (rename onto an existing name fails) and bait commitSnapshot's
-    * history filter.
-    */
-  private def clearCrashedGeneration(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, prefix: String): Unit =
-    fs.listStatus(dir).iterator.map(_.getPath)
-      .filter(_.getName.startsWith(prefix))
-      .foreach { p =>
-        if (!fs.delete(p, false))
-          throw new java.io.IOException(s"crashed-generation cleanup failed for $p")
-      }
-
-  /** Atomic rename-with-overwrite through the FileContext API (the
-    * FileSystem one cannot replace an existing destination portably).
-    */
-  private def overwriteRename(spark: org.apache.spark.sql.SparkSession,
-      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(dst.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(src, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
 
   /** Commit the directory's current parquet files as an immutable
     * numbered snapshot (`_manifest-v00001`, `-v00002`, …) — the Iceberg
@@ -629,10 +517,7 @@ object Sinks {
     var attempts = 0
     while (true) {
       attempts += 1
-      val physical = fs.listStatus(dir).iterator
-        .map(_.getPath.getName)
-        .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
-        .toSeq.sorted
+      val physical = Snapshots.dataFiles(fs, dir)
       val versions = Snapshots.versions(fs, dir)
       // next snapshot = the latest snapshot's file set plus files never
       // named by ANY prior manifest. Listing the physical directory alone
@@ -649,8 +534,7 @@ object Sinks {
       // commit reuses the crashed generation's version number.
       // (vacuumSnapshots reclaims such orphans once their version falls
       // behind the retention horizon.)
-      def isGenNamed(n: String): Boolean =
-        n.matches("(?:compact|replace)-v\\d{5,}-.*")
+      def isGenNamed(n: String): Boolean = Snapshots.rewriteGenVersion(n).isDefined
       val names = versions.lastOption match {
         case None => physical.filterNot(isGenNamed)
         case Some(latest) =>
@@ -666,10 +550,10 @@ object Sinks {
       }
       // allocate ABOVE every claim too: a crashed claimer's number is
       // burned (a gap in the version sequence), never spun on or reused
-      val next = Snapshots.allocatedVersions(fs, dir).lastOption.getOrElse(0) + 1
-      if (claimVersion(fs, dir, next)) {
+      val next = Snapshots.nextVersion(fs, dir)
+      if (Snapshots.claimVersion(fs, dir, next)) {
         beforePublish()
-        var v = publishClaimed(spark, fs, dir, next, names)
+        var v = Snapshots.publish(fs, dir, next, names)
         afterPublish()
         // Shadowed-append repair — the committer-side half of the
         // compaction CAS. compactSnapshot re-checks for racing claims
@@ -708,17 +592,10 @@ object Sinks {
           if (rounds >= 50)
             throw new java.io.IOException(
               s"shadowed-append repair contention on $dir after $rounds rounds")
-          var n2 = Snapshots.allocatedVersions(fs, dir).lastOption.getOrElse(0) + 1
-          var t2 = 0
-          while (!claimVersion(fs, dir, n2)) {
-            t2 += 1
-            if (t2 >= 50)
-              throw new java.io.IOException(
-                s"snapshot version allocation contention on $dir during repair")
-            n2 = Snapshots.allocatedVersions(fs, dir).lastOption.getOrElse(n2) + 1
-          }
-          v = publishClaimed(spark, fs, dir, n2,
-            (headFiles ++ newFiles).toSeq.sorted)
+          val n2 = Snapshots.claimNext(fs, dir).getOrElse(
+            throw new java.io.IOException(
+              s"snapshot version allocation contention on $dir during repair"))
+          v = Snapshots.publish(fs, dir, n2, (headFiles ++ newFiles).toSeq.sorted)
         }
       }
       if (attempts >= 50)
@@ -793,28 +670,16 @@ object Sinks {
     // claim the version BEFORE the rewrite (commitSnapshot's CAS
     // discipline): a racing committer can no longer land on the same
     // number and have one manifest silently clobber the other
-    var next = Snapshots.allocatedVersions(fs, dir).lastOption.getOrElse(0) + 1
-    var tries = 0
-    while (!claimVersion(fs, dir, next)) {
-      tries += 1
-      require(tries < 50, s"version allocation contention on $dir")
-      next = Snapshots.allocatedVersions(fs, dir).lastOption.getOrElse(next) + 1
-    }
+    val claimed = Snapshots.claimNext(fs, dir)
+    require(claimed.isDefined, s"version allocation contention on $dir")
+    val next = claimed.get
     val cur = Snapshots.files(fs, dir, latest)
       .map(n => new org.apache.hadoop.fs.Path(dir, n).toString)
-    val tmp = new org.apache.hadoop.fs.Path(dir, f".compact-v$next%05d")
-    spark.read.parquet(cur: _*).repartition(numFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val parts = fs.listStatus(tmp).iterator.map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet")).toSeq.sortBy(_.getName)
-    clearCrashedGeneration(fs, dir, f"compact-v$next%05d-")
-    val names = parts.zipWithIndex.map { case (p, i) =>
-      val n = f"compact-v$next%05d-p$i%04d.parquet"
-      if (!fs.rename(p, new org.apache.hadoop.fs.Path(dir, n)))
-        throw new java.io.IOException(s"compaction rename failed for $p")
-      n
+    val names = Snapshots.stageGeneration(fs, dir,
+        Snapshots.rewriteGen("compact", next), "compaction") { tmp =>
+      spark.read.parquet(cur: _*).repartition(numFiles)
+        .write.mode("overwrite").parquet(tmp.toString)
     }
-    fs.delete(tmp, true)
     beforePublish()
     // pre-publish re-check (replaceSnapshot's discipline): this manifest
     // names ONLY the rewrite of `latest`'s rows, so publishing after a
@@ -833,8 +698,7 @@ object Sinks {
     val freshLowerClaims = Snapshots.allocatedVersions(fs, dir).toSet
       .diff(preAllocated).filter(v => v > latest && v < next)
     if (headNow != Some(latest) || freshLowerClaims.nonEmpty) {
-      names.foreach(n => fs.delete(new org.apache.hadoop.fs.Path(dir, n), false))
-      fs.delete(claimPath(dir, next), false)
+      Snapshots.abandon(fs, dir, next, names)
       throw new java.io.IOException(
         s"compaction CAS failed for $path: rewrote v$latest but " +
           (if (headNow != Some(latest)) s"the head moved to v${headNow.getOrElse(0)}"
@@ -848,18 +712,8 @@ object Sinks {
     // publish leaves a marker for an unpublished version: never
     // consulted (the repair walks published versions only; the claim
     // blocks number reuse) and reclaimed by vacuum with the claim.
-    recordRewriteBase(fs, dir, next, latest)
-    publishClaimed(spark, fs, dir, next, names)
-  }
-
-  /** Publish the `_rewrite-vNNNNN-of-vMMMMM` provenance marker (see
-    * [[Snapshots.rewriteBases]]).
-    */
-  private def recordRewriteBase(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, version: Int, base: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir,
-      f"_rewrite-v$version%05d-of-v$base%05d")
-    fs.create(p, true).close()
+    Snapshots.recordRewriteBase(fs, dir, next, latest)
+    Snapshots.publish(fs, dir, next, names)
   }
 
   /** Snapshot REPLACEMENT: write `df` as a fresh file generation and
@@ -874,51 +728,65 @@ object Sinks {
     */
   def replaceSnapshot(spark: org.apache.spark.sql.SparkSession,
       path: String, df: DataFrame, numFiles: Int = 1,
-      expectedVersion: Int = -1): Int = {
+      expectedVersion: Int = -1): Int =
+    replaceSnapshotHooked(spark, path, df, numFiles, expectedVersion, -1,
+      () => ())
+
+  /** [[replaceSnapshot]] with the published head `df` was derived from
+    * (`base`; -1 = the head at entry) and a pre-publish seam, so a spec
+    * can land a racing commit inside the replacement window.
+    */
+  private[graft] def replaceSnapshotHooked(
+      spark: org.apache.spark.sql.SparkSession, path: String, df: DataFrame,
+      numFiles: Int, expectedVersion: Int, base: Int,
+      beforePublish: () => Unit): Int = {
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(dir)
-    val next = Snapshots.allocatedVersions(fs, dir).lastOption.getOrElse(0) + 1
+    val head0 =
+      if (base >= 0) base else Snapshots.versions(fs, dir).lastOption.getOrElse(0)
+    val next = Snapshots.nextVersion(fs, dir)
     // compare-and-swap contract: a replacement built against snapshot
     // vN names ONLY its own rows, so publishing after someone else
     // committed (or claimed) vN+1 would silently drop that commit from
     // the head — callers that trained/derived against a specific base
-    // pass expectedVersion = N+1 and get a pre-publish abort instead
+    // pass the number they expect to publish and get a pre-publish abort
+    // instead
     if (expectedVersion >= 0 && next != expectedVersion)
       throw new java.io.IOException(
-        s"snapshot CAS failed for $path: expected to publish v$expectedVersion, head moved to v${next - 1}")
+        s"snapshot CAS failed for $path: expected to publish v$expectedVersion, but v${next - 1} is already allocated")
     // exclusive claim on the number — a racer now aborts its CAS (or
     // allocates higher) instead of overwriting this manifest
-    if (!claimVersion(fs, dir, next))
+    if (!Snapshots.claimVersion(fs, dir, next))
       throw new java.io.IOException(
         s"snapshot CAS failed for $path: v$next was claimed concurrently")
-    val tmp = new org.apache.hadoop.fs.Path(dir, f".replace-v$next%05d")
-    df.repartition(numFiles).write.mode("overwrite").parquet(tmp.toString)
-    val parts = fs.listStatus(tmp).iterator.map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet")).toSeq.sortBy(_.getName)
-    clearCrashedGeneration(fs, dir, f"replace-v$next%05d-")
-    val names = parts.zipWithIndex.map { case (p, i) =>
-      val n = f"replace-v$next%05d-p$i%04d.parquet"
-      if (!fs.rename(p, new org.apache.hadoop.fs.Path(dir, n)))
-        throw new java.io.IOException(s"replacement rename failed for $p")
-      n
+    val names = Snapshots.stageGeneration(fs, dir,
+        Snapshots.rewriteGen("replace", next), "replacement") { tmp =>
+      df.repartition(numFiles).write.mode("overwrite").parquet(tmp.toString)
     }
-    fs.delete(tmp, true)
-    // re-check right before the manifest publish: the generation files
+    beforePublish()
+    // re-check right before the manifest publish: a racer that allocated
+    // above this claim, or a claim below it (one that predates the
+    // replacement when the caller's version skips it) that has since
+    // published, would be dropped from the head. The generation files
     // are on disk but unreferenced, so an abort leaves only vacuumable
     // garbage (plus the released claim), never a wrong head
-    val nowTop = Snapshots.allocatedVersions(fs, dir).lastOption.getOrElse(0)
-    if (expectedVersion >= 0 && nowTop != expectedVersion) {
-      names.foreach(n => fs.delete(new org.apache.hadoop.fs.Path(dir, n), false))
-      fs.delete(claimPath(dir, next), false) // release the claim on abort
-      throw new java.io.IOException(
-        s"snapshot CAS failed for $path: expected to publish v$expectedVersion, a racer allocated v$nowTop")
+    if (expectedVersion >= 0) {
+      val nowTop = Snapshots.allocatedVersions(fs, dir).lastOption.getOrElse(0)
+      val headNow = Snapshots.versions(fs, dir).lastOption.getOrElse(0)
+      if (nowTop != expectedVersion || headNow != head0) {
+        Snapshots.abandon(fs, dir, next, names)
+        throw new java.io.IOException(
+          s"snapshot CAS failed for $path: expected to publish v$expectedVersion over v$head0, " +
+            (if (headNow != head0) s"but v$headNow was published"
+             else s"a racer allocated v$nowTop"))
+      }
     }
     // base 0 = "carries nothing forward": a REPLACEMENT drops every
     // prior row by design, so a shadowed append must still republish on
     // top of it (unlike a compaction of a head that contained its rows)
-    recordRewriteBase(fs, dir, next, 0)
-    publishClaimed(spark, fs, dir, next, names)
+    Snapshots.recordRewriteBase(fs, dir, next, 0)
+    Snapshots.publish(fs, dir, next, names)
   }
 
   /** Pin a committed snapshot version under a NAME (the Iceberg tag/ref
@@ -943,8 +811,7 @@ object Sinks {
   private[graft] def tagSnapshotHooked(
       spark: org.apache.spark.sql.SparkSession, path: String,
       tag: String, version: Int, beforePublish: () => Unit): Int = {
-    require(tag.nonEmpty && tag.matches("[A-Za-z0-9._=-]+"),
-      s"tagSnapshot needs a plain-token tag name, got '$tag'")
+    Snapshots.requireToken(tag, s"tagSnapshot needs a plain-token tag name, got '$tag'")
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val published = Snapshots.versions(fs, dir)
@@ -955,19 +822,13 @@ object Sinks {
     if (!published.contains(v))
       throw new java.io.FileNotFoundException(
         s"$path has no committed snapshot v$v to tag")
-    val tmp = new org.apache.hadoop.fs.Path(dir, s"._tag-$tag.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$v\n".getBytes("UTF-8"))
-    finally out.close()
-    beforePublish()
-    val dst = new org.apache.hadoop.fs.Path(dir, s"_tag-$tag")
-    // plain rename: fails when the destination exists (immutability) —
-    // the same no-overwrite publish discipline as the manifests
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
+    val dst = Snapshots.tagPath(dir, tag)
+    // no-overwrite publish: fails when the tag exists (immutability) —
+    // the same discipline as the manifests
+    if (!Snapshots.publishText(fs, dst, Seq(v.toString), overwrite = false,
+        beforeRename = beforePublish))
       throw new java.io.IOException(
         s"tag '$tag' already exists on $path (tags are immutable; deleteTag first)")
-    }
     // post-publish re-check against a concurrent vacuum: vacuum re-reads
     // the tag set right before its destructive phase, so a tag published
     // BEFORE that read is protected; a tag that lost the race (vacuum
@@ -977,7 +838,7 @@ object Sinks {
     // manifest delete; here: tag publish then manifest check), so at
     // least one side always observes the other: the tag survives only if
     // the version does.
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, f"_manifest-v$v%05d"))) {
+    if (!fs.exists(Snapshots.manifestPath(dir, v))) {
       fs.delete(dst, false)
       throw new java.io.IOException(
         s"tag '$tag' lost a race with vacuum on $path: v$v was reclaimed " +
@@ -991,11 +852,10 @@ object Sinks {
     */
   def deleteTag(spark: org.apache.spark.sql.SparkSession, path: String,
       tag: String): Boolean = {
-    require(tag.nonEmpty && tag.matches("[A-Za-z0-9._=-]+"),
-      s"deleteTag needs a plain-token tag name, got '$tag'")
+    Snapshots.requireToken(tag, s"deleteTag needs a plain-token tag name, got '$tag'")
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(dir, s"_tag-$tag"), false)
+    fs.delete(Snapshots.tagPath(dir, tag), false)
   }
 
   /** All tags on a snapshot directory: name → pinned version. */
@@ -1004,64 +864,6 @@ object Sinks {
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Snapshots.tags(fs, dir)
-  }
-
-  private def claimPath(dir: org.apache.hadoop.fs.Path, version: Int) =
-    new org.apache.hadoop.fs.Path(dir, f"_claim-v$version%05d")
-
-  /** Exclusively claim `version` by creating its `_claim-v<version>`
-    * marker with create-fails-if-exists — the atomic version-allocation
-    * primitive (O_CREAT|O_EXCL on a local FS; HDFS create is likewise
-    * exclusive without overwrite). The claim is a SEPARATE name from
-    * the manifest, so the later publish renames onto a destination
-    * that never exists — plain atomic rename, no overwrite semantics
-    * anywhere in the commit path (ChecksumFs drops the OVERWRITE
-    * option on some rename routes). Claims are invisible to readers:
-    * only `_manifest-v*` names are snapshots. Returns false when the
-    * version is already taken.
-    */
-  private def claimVersion(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, version: Int): Boolean = {
-    val p = claimPath(dir, version)
-    fs match {
-      case _: org.apache.hadoop.fs.LocalFileSystem |
-          _: org.apache.hadoop.fs.RawLocalFileSystem =>
-        // LocalFileSystem.create(overwrite = false) is exists-THEN-create
-        // — two racers can both pass the check; java.io.createNewFile is
-        // the OS's actual O_CREAT|O_EXCL
-        new java.io.File(p.toUri.getPath).createNewFile()
-      case _ =>
-        // HDFS-class filesystems make non-overwrite create atomic on
-        // the namenode
-        try { fs.create(p, false).close(); true }
-        catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-          case e: java.io.IOException
-              if e.getMessage != null &&
-                e.getMessage.contains("already exists") =>
-            false
-        }
-    }
-  }
-
-  /** Publish a CLAIMED version: temp-write the file list, atomically
-    * rename it to the manifest name (which cannot exist — exclusivity
-    * came from [[claimVersion]]), then drop the claim marker. A crash
-    * between rename and drop leaves a claim whose manifest exists —
-    * harmless (allocation reads both) and vacuumed later.
-    */
-  private def publishClaimed(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path,
-      version: Int, names: Seq[String]): Int = {
-    val tmp = new org.apache.hadoop.fs.Path(dir, f"._manifest-v$version%05d.tmp")
-    val out = fs.create(tmp, true)
-    try out.write((names.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    val manifest = new org.apache.hadoop.fs.Path(dir, f"_manifest-v$version%05d")
-    if (!fs.rename(tmp, manifest))
-      throw new java.io.IOException(s"snapshot commit failed for $manifest")
-    fs.delete(claimPath(dir, version), false)
-    version
   }
 
   /** Retention vacuum for a [[commitSnapshot]] directory: drop every
@@ -1118,7 +920,6 @@ object Sinks {
     // stale-claim sweeps must still run when every aged-out version
     // happens to be tagged ("run vacuum to reclaim stale claims" would
     // otherwise silently no-op on exactly such a table).
-    val genPat = "(?:compact|replace)-v(\\d{5,})-.*".r
     val horizon = droppedByAge.last
     // destructive phase starts here — re-check tags NOW so a tag that
     // landed during planning is honored; the remaining window (a tag
@@ -1137,15 +938,14 @@ object Sinks {
       .flatMap(v => Snapshots.files(fs, dir, v)).toSet ++
       droppedManifests.values.flatten
     val orphanGens = fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .filter(n => n match {
-        case genPat(v) => v.toInt <= horizon && !referencedEver.contains(n)
-        case _ => false
-      }).toSet
+      .filter(n => Snapshots.rewriteGenVersion(n).exists(_ <= horizon) &&
+        !referencedEver.contains(n))
+      .toSet
     // manifests first: once a version is unreadable its files are
     // unreachable, so a crash mid-vacuum leaves garbage, never a
     // readable snapshot with missing files
     dropped.foreach { v =>
-      val m = new org.apache.hadoop.fs.Path(dir, f"_manifest-v$v%05d")
+      val m = Snapshots.manifestPath(dir, v)
       if (fs.exists(m) && !fs.delete(m, false))
         throw new java.io.IOException(s"vacuum: manifest delete failed for $m")
     }
@@ -1162,12 +962,8 @@ object Sinks {
     val lateTagged = Snapshots.tags(fs, dir).values.toSet
     val (restored, droppedFinal) = dropped.partition(lateTagged)
     restored.foreach { v =>
-      val tmp = new org.apache.hadoop.fs.Path(dir, f"._manifest-v$v%05d.tmp")
-      val out = fs.create(tmp, true)
-      try out.write((droppedManifests(v).mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-      val m = new org.apache.hadoop.fs.Path(dir, f"_manifest-v$v%05d")
-      if (!fs.rename(tmp, m))
+      val m = Snapshots.manifestPath(dir, v)
+      if (!Snapshots.publishText(fs, m, droppedManifests(v), overwrite = false))
         throw new java.io.IOException(s"vacuum: tag-race manifest restore failed for $m")
     }
     val keptFiles = (protectedByTag ++ restored ++ keptByAge)
@@ -1181,19 +977,11 @@ object Sinks {
     val published = Snapshots.versions(fs, dir).toSet
     Snapshots.allocatedVersions(fs, dir)
       .filter(v => v <= horizon || published.contains(v))
-      .foreach { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(dir, f"_claim-v$v%05d"), false)
-      }
+      .foreach(v => fs.delete(Snapshots.claimPath(dir, v), false))
     // rewrite-provenance markers below the horizon: the repair walk only
     // consults versions above a LIVE commit's own (always > horizon), so
     // these served their purpose — reclaim them with the claims
-    val rewritePat = "_rewrite-v(\\d{5,})-of-v\\d{5,}".r
-    fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .foreach {
-        case n @ rewritePat(v) if v.toInt <= horizon =>
-          fs.delete(new org.apache.hadoop.fs.Path(dir, n), false)
-        case _ => ()
-      }
+    Snapshots.dropRewriteBases(fs, dir, horizon)
     // a swallowed data-file delete would report success while leaving a
     // file no manifest references — unreclaimable forever, and ready to
     // be resurrected as a "new append" by a later commit
@@ -1238,12 +1026,8 @@ object Sinks {
     }.sorted
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(dir, "._stats.tmp")
-    val out = fs.create(tmp, true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    val statsPath = new org.apache.hadoop.fs.Path(dir, "_stats")
-    overwriteRename(spark, fs.makeQualified(tmp), fs.makeQualified(statsPath))
+    Snapshots.publishText(fs, new org.apache.hadoop.fs.Path(dir, Snapshots.Stats),
+      lines, overwrite = true)
     lines.length
   }
 
@@ -1457,102 +1241,5 @@ object Sinks {
       finally ps.close()
       conn.commit()
     } finally conn.close()
-  }
-}
-
-/** Shared snapshot-manifest naming/listing for [[Sinks]] and
-  * [[Readers]].
-  */
-private[sources] object Snapshots {
-  /** Ascending PUBLISHED version numbers in `dir` — `_manifest-v*`
-    * names only; `_claim-v*` allocation markers are not snapshots.
-    * (The zero-length guard is belt-and-braces: a manifest is only
-    * ever created by an atomic rename of fully-written content.)
-    */
-  def versions(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Seq[Int] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).iterator
-      .collect {
-        case st if st.getPath.getName.matches("_manifest-v\\d{5,}") &&
-            st.getLen > 0 =>
-          st.getPath.getName.stripPrefix("_manifest-v").toInt
-      }
-      .toSeq.sorted
-
-  /** Ascending ALLOCATED version numbers — published manifests UNION
-    * outstanding claims. Version allocation starts above this, so a
-    * crashed claimer can never make a live committer spin on (or
-    * reuse) its number; the crashed number is simply a gap.
-    */
-  def allocatedVersions(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Seq[Int] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).iterator
-      .map(_.getPath.getName)
-      .collect {
-        case n if n.matches("_manifest-v\\d{5,}") =>
-          n.stripPrefix("_manifest-v").toInt
-        case n if n.matches("_claim-v\\d{5,}") =>
-          n.stripPrefix("_claim-v").toInt
-      }
-      .toSeq.distinct.sorted
-
-  /** Named snapshot tags in `dir`: tag name → pinned version (the
-    * Iceberg ref concept — `_tag-<name>` files whose content is the
-    * version number). Unparseable/empty tag files are ignored rather
-    * than failing every listing (a torn write cannot happen — tags
-    * publish by atomic rename — but a foreign file matching the
-    * pattern should not poison reads).
-    */
-  def tags(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Map[String, Int] =
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir).iterator
-      .filter(st => st.getPath.getName.startsWith("_tag-") && st.getLen > 0)
-      .flatMap { st =>
-        val in = fs.open(st.getPath)
-        val content =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        scala.util.Try(content.toInt).toOption
-          .map(v => st.getPath.getName.stripPrefix("_tag-") -> v)
-      }
-      .toMap
-
-  /** Rewrite provenance: version → the base version whose ROWS that
-    * version's generation rewrote — the `_rewrite-vNNNNN-of-vMMMMM`
-    * markers [[Sinks.compactSnapshot]] (base = the head it compacted)
-    * and [[Sinks.replaceSnapshot]] (base = 0: a replacement carries
-    * NOTHING forward) record just before publishing. Consulted by the
-    * shadowed-append repair to decide whether a head that dropped this
-    * commit's file NAMES still carries its ROWS (compaction of a head
-    * that contained them) or genuinely lost them (compaction of an
-    * older base / a replacement). Versions with no marker are plain
-    * appends, which always union the prior head forward.
-    */
-  def rewriteBases(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Map[Int, Int] = {
-    val pat = "_rewrite-v(\\d{5,})-of-v(\\d{5,})".r
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .collect { case pat(v, b) => v.toInt -> b.toInt }
-      .toMap
-  }
-
-  /** File names listed by one committed snapshot manifest (an
-    * unfulfilled claim reads as "no committed snapshot", like a
-    * missing manifest).
-    */
-  def files(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, version: Int): Seq[String] = {
-    val manifest = new org.apache.hadoop.fs.Path(dir, f"_manifest-v$version%05d")
-    if (!fs.exists(manifest) || fs.getFileStatus(manifest).getLen == 0)
-      throw new java.io.FileNotFoundException(
-        s"$dir has no committed snapshot v$version")
-    val in = fs.open(manifest)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).toList
-    finally in.close()
   }
 }

@@ -234,12 +234,6 @@ object EventStreams {
         (col("p_ts").cast("long") - col("s_ts").cast("long")).as("lag_seconds"))
   }
 
-  /** Streaming exact dedup: drop re-delivered event_ids within the
-    * watermark horizon — the streaming form of the batch
-    * `dropDuplicates("event_id")` in CleanOps.cleanEvents. State is one
-    * (event_id, ts) entry per id inside the watermark, evicted as the
-    * watermark advances.
-    */
   /** Stream-static enrichment: every micro-batch broadcast-joins the
     * STATIC dim (the live form of the warehouse dim lookup — route/tag
     * events with customer attributes before windowing). Stateless: no
@@ -255,6 +249,12 @@ object EventStreams {
       .withColumn("segment", coalesce(col("c_mktsegment"), lit("UNKNOWN")))
       .drop("c_mktsegment")
 
+  /** Streaming exact dedup: drop re-delivered event_ids within the
+    * watermark horizon — the streaming form of the batch
+    * `dropDuplicates("event_id")` in CleanOps.cleanEvents. State is one
+    * (event_id, ts) entry per id inside the watermark, evicted as the
+    * watermark advances.
+    */
   def dedupStream(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "1 hour")
@@ -439,7 +439,7 @@ object EventStreams {
     */
   def aggMaintainStream(events: DataFrame, storePath: String,
       streamId: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(streamId.nonEmpty && streamId.matches("[A-Za-z0-9_.=-]+"),
+    graft.sources.Snapshots.requireToken(streamId,
       s"aggMaintainStream needs a plain-token streamId, got '$streamId'")
     events
       .select(col("event_type"), lit(1L).as("n_events"),
@@ -508,7 +508,7 @@ object EventStreams {
       props: Map[String, String] = Map.empty,
       outputMode: String = "update")
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(streamId.nonEmpty && streamId.matches("[A-Za-z0-9_.=-]+"),
+    graft.sources.Snapshots.requireToken(streamId,
       s"jdbcUpsertStream needs a plain-token streamId, got '$streamId'")
     rows
       .writeStream
@@ -596,7 +596,7 @@ object EventStreams {
     // interpolated into report names, the replay-cleanup pattern, and the
     // marker directory path, so '/' or other path metacharacters would
     // corrupt the layout
-    require(streamId.nonEmpty && streamId.matches("[A-Za-z0-9_.=-]+"),
+    graft.sources.Snapshots.requireToken(streamId,
       "statsDriftStream needs a plain-token streamId")
     rows
       .writeStream
@@ -607,36 +607,18 @@ object EventStreams {
           val spark = batch.sparkSession
           val dir = new org.apache.hadoop.fs.Path(reportPath)
           val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val gen = f"drift-$streamId-b$batchId%010d-"
-          // clear a crashed previous attempt of THIS generation before
-          // re-writing (deterministic names make it recognizable). Match
-          // the FULL name, not a prefix: '-' is in the streamId alphabet,
-          // so a prefix test could adopt a sibling stream's generation
-          // (streamId "a" batch 1 vs streamId "a-b0000000001") and delete
-          // its committed reports during replay.
-          val genFile = java.util.regex.Pattern.compile(
-            java.util.regex.Pattern.quote(gen) + "p\\d{4}\\.parquet")
-          if (fs.exists(dir))
-            fs.listStatus(dir).iterator.map(_.getPath)
-              .filter(p => genFile.matcher(p.getName).matches())
-              .foreach { p =>
-                if (!fs.delete(p, false))
-                  throw new java.io.IOException(s"drift replay cleanup failed for $p")
-              }
+          // a crashed previous attempt of THIS generation is cleared
+          // before the rename (deterministic names make it recognizable,
+          // matched by FULL name so a hyphenated sibling stream's
+          // generation is never adopted or deleted)
           val baseline = spark.read.parquet(baselinePath)
-          val tmp = new org.apache.hadoop.fs.Path(dir, s".$gen")
-          graft.operators.AuditOps.statsDrift(baseline, batch, cols)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
-          fs.mkdirs(dir)
-          val parts = fs.listStatus(tmp).iterator.map(_.getPath)
-            .filter(_.getName.endsWith(".parquet")).toSeq.sortBy(_.getName)
-          parts.zipWithIndex.foreach { case (p, i) =>
-            val n = f"$gen%sp$i%04d.parquet"
-            if (!fs.rename(p, new org.apache.hadoop.fs.Path(dir, n)))
-              throw new java.io.IOException(s"drift report rename failed for $p")
+          graft.sources.Snapshots.stageGeneration(fs, dir,
+              graft.sources.Snapshots.batchGen("drift", streamId, batchId),
+              "drift report") { tmp =>
+            graft.operators.AuditOps.statsDrift(baseline, batch, cols)
+              .withColumn("batch_id", lit(batchId))
+              .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
           }
-          fs.delete(tmp, true)
           writeMarker(batch, marker)
         }
         ()
@@ -660,7 +642,7 @@ object EventStreams {
   def ksDriftStream(rows: DataFrame, baselinePath: String,
       reportPath: String, valueCol: String, streamId: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(streamId.nonEmpty && streamId.matches("[A-Za-z0-9_.=-]+"),
+    graft.sources.Snapshots.requireToken(streamId,
       "ksDriftStream needs a plain-token streamId")
     rows
       .writeStream
@@ -671,18 +653,6 @@ object EventStreams {
           val spark = batch.sparkSession
           val dir = new org.apache.hadoop.fs.Path(reportPath)
           val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val gen = f"ks-$streamId-b$batchId%010d-"
-          // full-name match, not startsWith — see statsDriftStream: a
-          // hyphenated streamId can prefix-extend a sibling's generation
-          val genFile = java.util.regex.Pattern.compile(
-            java.util.regex.Pattern.quote(gen) + "p\\d{4}\\.parquet")
-          if (fs.exists(dir))
-            fs.listStatus(dir).iterator.map(_.getPath)
-              .filter(p => genFile.matcher(p.getName).matches())
-              .foreach { p =>
-                if (!fs.delete(p, false))
-                  throw new java.io.IOException(s"ks replay cleanup failed for $p")
-              }
           def quant(df: DataFrame, a: Long, b: Long) = df
             .select(floor(col(valueCol)).cast("long").as("v"),
               lit(a).as("ea"), lit(b).as("eb"))
@@ -690,21 +660,15 @@ object EventStreams {
             .unionByName(quant(batch, 0L, 1L))
             .groupBy(col("v"))
             .agg(sum(col("ea")).as("a"), sum(col("eb")).as("b"))
-          val tmp = new org.apache.hadoop.fs.Path(dir, s".$gen")
-          graft.operators.StatOps.ksFromCounts(byV)
-            .select(col("n_a").as("n_base"), col("n_b").as("n_batch"),
-              col("ks_at_v"), col("d_micro"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
-          fs.mkdirs(dir)
-          val parts = fs.listStatus(tmp).iterator.map(_.getPath)
-            .filter(_.getName.endsWith(".parquet")).toSeq.sortBy(_.getName)
-          parts.zipWithIndex.foreach { case (p, i) =>
-            val n = f"$gen%sp$i%04d.parquet"
-            if (!fs.rename(p, new org.apache.hadoop.fs.Path(dir, n)))
-              throw new java.io.IOException(s"ks report rename failed for $p")
+          graft.sources.Snapshots.stageGeneration(fs, dir,
+              graft.sources.Snapshots.batchGen("ks", streamId, batchId),
+              "ks report") { tmp =>
+            graft.operators.StatOps.ksFromCounts(byV)
+              .select(col("n_a").as("n_base"), col("n_b").as("n_batch"),
+                col("ks_at_v"), col("d_micro"))
+              .withColumn("batch_id", lit(batchId))
+              .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
           }
-          fs.delete(tmp, true)
           writeMarker(batch, marker)
         }
         ()
@@ -735,7 +699,7 @@ object EventStreams {
   def gapMonitorStream(rows: DataFrame, reportPath: String, tsCol: String,
       streamId: String, bucketSeconds: Long = 3600L, maxBuckets: Long = 100000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(streamId.nonEmpty && streamId.matches("[A-Za-z0-9_.=-]+"),
+    graft.sources.Snapshots.requireToken(streamId,
       "gapMonitorStream needs a plain-token streamId")
     require(bucketSeconds > 0 && maxBuckets > 0)
     rows
@@ -747,16 +711,6 @@ object EventStreams {
           val spark = batch.sparkSession
           val dir = new org.apache.hadoop.fs.Path(reportPath)
           val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val gen = f"gap-$streamId-b$batchId%010d-"
-          val genFile = java.util.regex.Pattern.compile(
-            java.util.regex.Pattern.quote(gen) + "p\\d{4}\\.parquet")
-          if (fs.exists(dir))
-            fs.listStatus(dir).iterator.map(_.getPath)
-              .filter(p => genFile.matcher(p.getName).matches())
-              .foreach { p =>
-                if (!fs.delete(p, false))
-                  throw new java.io.IOException(s"gap replay cleanup failed for $p")
-              }
           val buckets = batch
             .select(expr(s"cast($tsCol as long) div $bucketSeconds").as("bkt"))
           val present = buckets.groupBy(col("bkt")).agg(count(lit(1)).as("n"))
@@ -768,18 +722,12 @@ object EventStreams {
           val gaps = spine.join(present, Seq("bkt"), "left_anti")
             .select((col("bkt") * bucketSeconds).as("bucket_start_s"))
             .withColumn("batch_id", lit(batchId))
-          val tmp = new org.apache.hadoop.fs.Path(dir, s".$gen")
-          gaps.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(tmp.toString)
-          fs.mkdirs(dir)
-          val parts = fs.listStatus(tmp).iterator.map(_.getPath)
-            .filter(_.getName.endsWith(".parquet")).toSeq.sortBy(_.getName)
-          parts.zipWithIndex.foreach { case (p, i) =>
-            val n = f"$gen%sp$i%04d.parquet"
-            if (!fs.rename(p, new org.apache.hadoop.fs.Path(dir, n)))
-              throw new java.io.IOException(s"gap report rename failed for $p")
+          graft.sources.Snapshots.stageGeneration(fs, dir,
+              graft.sources.Snapshots.batchGen("gap", streamId, batchId),
+              "gap report") { tmp =>
+            gaps.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+              .parquet(tmp.toString)
           }
-          fs.delete(tmp, true)
           writeMarker(batch, marker)
         }
         ()
@@ -854,11 +802,6 @@ object EventStreams {
     val dir = new org.apache.hadoop.fs.Path(indexPath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return None
-    def versionsOf(prefix: String): Seq[Int] =
-      fs.listStatus(dir).iterator.map(_.getPath.getName)
-        .collect { case n if n.matches(prefix + "\\d{5,}") =>
-          n.stripPrefix(prefix).toInt }
-        .toSeq.sorted
     // pair the model with the COMMITTED head: the newest sidecar whose
     // version ≤ the latest manifest. During a retrain's re-encode
     // window the new sidecar exists but its manifest doesn't yet —
@@ -867,14 +810,13 @@ object EventStreams {
     // swap actually commits. `atVersion` pins a HISTORICAL pairing (the
     // newest sidecar at-or-below that snapshot) for time-traveled probes.
     val head = atVersion.getOrElse(
-      versionsOf("_manifest-v").lastOption.getOrElse(0))
-    val latest = versionsOf("_model-v").filter(_ <= head).lastOption
+      graft.sources.Snapshots.versions(fs, dir).lastOption.getOrElse(0))
+    val latest = graft.sources.Snapshots.modelVersions(fs, dir)
+      .filter(_ <= head).lastOption
     latest.map { v =>
-      val in = fs.open(new org.apache.hadoop.fs.Path(dir, f"_model-v$v%05d"))
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .filter(_.nonEmpty).map(_.split("\t", -1)).toList
-        finally in.close()
+      val lines = graft.sources.Snapshots
+        .lines(fs, graft.sources.Snapshots.modelPath(dir, v))
+        .map(_.split("\t", -1))
       val ivf = Array.ofDim[Float](graft.operators.SimilarityOps.IvfCells,
         graft.operators.SimilarityOps.Dim)
       val pq = Array.ofDim[Float](graft.operators.SimilarityOps.PqSub,
@@ -909,16 +851,29 @@ object EventStreams {
     * version it trained against; a tiny check-to-publish window remains
     * (a lock service closes it in production). Returns the new version.
     */
-  def annIndexRetrain(corpus: DataFrame, indexPath: String): Int = {
+  def annIndexRetrain(corpus: DataFrame, indexPath: String): Int =
+    annIndexRetrainHooked(corpus, indexPath, () => ())
+
+  /** [[annIndexRetrain]] with a seam just before the manifest publish,
+    * so a spec can land a racing commit inside the replacement window.
+    */
+  private[graft] def annIndexRetrainHooked(corpus: DataFrame,
+      indexPath: String, beforePublish: () => Unit): Int = {
     val spark = corpus.sparkSession
     val dir = new org.apache.hadoop.fs.Path(indexPath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(dir)
-    def headVersion: Int = fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .collect { case n if n.matches("_manifest-v\\d{5,}") =>
-        n.stripPrefix("_manifest-v").toInt }
-      .toSeq.sorted.lastOption.getOrElse(0)
+    def headVersion: Int =
+      graft.sources.Snapshots.versions(fs, dir).lastOption.getOrElse(0)
     val base = headVersion
+    // the version this swap publishes, allocated the way every committer
+    // allocates — above published heads AND outstanding claims, so a
+    // claim a crashed committer left above the head is a gap, not a
+    // wedge. Read BEFORE training: replaceSnapshot's CAS then aborts on
+    // any claim that appears while the model trains, and (given `base`)
+    // on a skipped claim that turns out live and publishes before the
+    // swap does.
+    val next = graft.sources.Snapshots.nextVersion(fs, dir)
     val model = graft.operators.SimilarityOps.trainAnnModel(corpus)
     // abort BEFORE publishing if anything committed while training: its
     // rows are not in `corpus`, and a post-publish failure would already
@@ -927,21 +882,17 @@ object EventStreams {
     require(seen == base,
       s"ingest committed v$seen during retrain (trained against v$base); " +
         "quiesce the ingest stream and re-run with a fresh corpus snapshot")
-    val next = base + 1
-    val tmp = new org.apache.hadoop.fs.Path(dir, f"._model-v$next%05d.tmp")
-    val out = fs.create(tmp, true)
-    try out.write((modelLines(model).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    val sidecar = new org.apache.hadoop.fs.Path(dir, f"_model-v$next%05d")
-    if (!fs.rename(tmp, sidecar))
+    val sidecar = graft.sources.Snapshots.modelPath(dir, next)
+    if (!graft.sources.Snapshots.publishText(fs, sidecar, modelLines(model),
+        overwrite = false))
       throw new java.io.IOException(s"model publish failed for $indexPath")
-    // replaceSnapshot's CAS (expectedVersion) guarantees the manifest
-    // publishes against the trained-on head or not at all; on abort the
-    // orphan sidecar is removed so readers never see a model with no
-    // matching manifest generation
-    try graft.sources.Sinks.replaceSnapshot(spark, indexPath,
-      graft.operators.SimilarityOps.encodeSlim(corpus, model),
-      expectedVersion = next)
+    // replaceSnapshot's CAS (expectedVersion over base) guarantees the
+    // manifest publishes against the trained-on head or not at all; on
+    // abort the orphan sidecar is removed so readers never see a model
+    // with no matching manifest generation
+    try graft.sources.Sinks.replaceSnapshotHooked(spark, indexPath,
+      graft.operators.SimilarityOps.encodeSlim(corpus, model), 1,
+      expectedVersion = next, base = base, beforePublish = beforePublish)
     catch { case e: Throwable => fs.delete(sidecar, false); throw e }
   }
 
@@ -1486,11 +1437,7 @@ object EventStreams {
         val fs = new org.apache.hadoop.fs.Path(dimPath)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         val dimP = fs.makeQualified(new org.apache.hadoop.fs.Path(dimPath))
-        val dangling =
-          if (!fs.exists(dimP.getParent)) None
-          else fs.listStatus(dimP.getParent).iterator.map(_.getPath)
-            .find(_.getName.startsWith(dimP.getName + "-retired-"))
-        dangling.foreach { d =>
+        graft.sources.Snapshots.retiredLeftover(fs, dimPath).foreach { d =>
           throw new IllegalStateException(
             s"SCD2 store swap was interrupted: found $d; " +
               s"restore it to $dimPath (or delete it if $dimPath is complete) before resuming")
@@ -1528,19 +1475,10 @@ object EventStreams {
             lit(true).as("is_current"))
         val next = closedHistory.unionByName(kept).unionByName(closed)
           .unionByName(opened).unionByName(fresh)
-        val staging = new org.apache.hadoop.fs.Path(s"$dimPath-staging-$batchId")
-        next.write.mode("overwrite").parquet(staging.toString)
-        val retired = new org.apache.hadoop.fs.Path(s"$dimPath-retired-$batchId")
-        if (fs.exists(dimP) && !fs.rename(dimP, retired))
-          throw new java.io.IOException(s"SCD2 swap: retire rename failed for $dimPath")
-        if (!fs.rename(staging, dimP))
-          throw new java.io.IOException(s"SCD2 swap: staging rename failed for $staging")
-        // the retired-store delete must THROW on failure: swallowing it
-        // would leave a dangling -retired dir that makes every later
-        // batch fail the interrupted-swap check with a misleading
+        // every swap step THROWS on failure: a swallowed retired-store
+        // delete would leave a dangling -retired dir that makes every
+        // later batch fail the interrupted-swap check with a misleading
         // "restore the store" message while hiding the real cause
-        if (fs.exists(retired) && !fs.delete(retired, true))
-          throw new java.io.IOException(s"SCD2 swap: retired delete failed for $retired")
-        ()
+        graft.sources.Snapshots.rewriteStore(dimPath, next, batchId)(_ => ())
       }
 }

@@ -628,6 +628,19 @@ class SourcesSpec extends SparkSpec {
     assert(Readers.readSnapshot(spark, path).count() == 25)
   }
 
+  test("appendSnapshotOnce: a hyphenated stream's generation is not another stream's batch") {
+    val path = s"${tmp()}/table"
+    val rows = (1L to 4L).map(i => (i, s"r$i")).toDF("id", "text")
+    // stream "a-b0000000001" batch 2 names its parts
+    // ingest-a-b0000000001-b0000000002-pNNNN: a prefix of them is
+    // stream "a" batch 1's generation, which must still commit
+    assert(Sinks.appendSnapshotOnce(spark, path, rows, "a-b0000000001", 2L))
+    assert(Sinks.appendSnapshotOnce(spark, path, rows, "a", 1L))
+    assert(Readers.readSnapshot(spark, path).count() == 8)
+    assert(!Sinks.appendSnapshotOnce(spark, path, rows, "a", 1L))
+    assert(Readers.readSnapshot(spark, path).count() == 8)
+  }
+
   test("mergeAggregate commitTag publishes atomically with the data") {
     val dir = tmp()
     val path = s"$dir/rollup"

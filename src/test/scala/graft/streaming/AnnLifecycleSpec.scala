@@ -121,6 +121,54 @@ class AnnLifecycleSpec extends SparkSpec {
       .count() == rows.length + 5, "uncommitted files must stay invisible")
   }
 
+  test("a crashed claim above the head does not block a retrain") {
+    val store = java.nio.file.Files.createTempDirectory("graft_annclaim")
+      .toString + "/index"
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select("vec_id", "embedding", "label")
+    graft.sources.Sinks.appendSnapshotOnce(spark, store,
+      SimilarityOps.encodeSlim(emb, SimilarityOps.FixedAnnModel), "c1", 0L)
+    // a committer that claimed v2 and died before publishing
+    assert(new java.io.File(store, "_claim-v00002").createNewFile())
+    assert(EventStreams.annIndexRetrain(emb, store) == 3)
+    val model = EventStreams.readAnnModel(spark, store)
+    assert(model.isDefined, "the retrain's sidecar must pair with the v3 head")
+    def coded(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    assert(coded(graft.sources.Readers.readSnapshot(spark, store)) ==
+      coded(SimilarityOps.encodeSlim(emb, model.get)))
+    assert(EventStreams.readAnnModel(spark, store, atVersion = Some(1)).isEmpty)
+  }
+
+  test("a live claim the retrain skipped aborts the swap when it publishes first") {
+    import graft.sources.Snapshots
+    val store = java.nio.file.Files.createTempDirectory("graft_annlive")
+      .toString + "/index"
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select("vec_id", "embedding", "label")
+    graft.sources.Sinks.appendSnapshotOnce(spark, store,
+      SimilarityOps.encodeSlim(emb, SimilarityOps.FixedAnnModel), "c1", 0L)
+    val dir = new org.apache.hadoop.fs.Path(store)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a committer that claimed v2 before the retrain and is still running:
+    // the retrain allocates v3 over it, and the committer publishes v2
+    // while the replacement is staged
+    assert(Snapshots.claimVersion(fs, dir, 2))
+    val ex = intercept[java.io.IOException] {
+      EventStreams.annIndexRetrainHooked(emb, store, () => {
+        Snapshots.publish(fs, dir, 2, Snapshots.files(fs, dir, 1))
+        ()
+      })
+    }
+    assert(ex.getMessage.contains("snapshot CAS failed"), ex.getMessage)
+    assert(Snapshots.versions(fs, dir) == Seq(1, 2),
+      "the committer's v2 must stay the head")
+    assert(Snapshots.allocatedVersions(fs, dir) == Seq(1, 2),
+      "the aborted swap must release its claim")
+    assert(Snapshots.modelVersions(fs, dir).isEmpty,
+      "the aborted swap must remove its sidecar")
+    assert(EventStreams.readAnnModel(spark, store).isEmpty)
+  }
+
   test("index maintenance: compaction keeps probes bit-identical, vacuum reclaims superseded generations") {
     // streaming cadence = the small-file problem by construction: each
     // micro-batch appends its own generation files, so the serving scan
