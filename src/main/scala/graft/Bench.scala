@@ -154,15 +154,19 @@ object Bench {
     // single-shot rerun — two clean runs still differ ~13% total, so a
     // reader comparing snapshots needs to know which protocol produced
     // each (the committed convention is runs:3 + STRICT=1).
+    // A named subset re-times a few queries only: it must not replace
+    // the full-run snapshot, so it prints the summary line alone.
     val cj = s""""contended_jvms":${contended.length},"runs":$iters"""
-    val fullPath = java.nio.file.Paths.get("BENCH_FULL.json")
-    java.nio.file.Files.write(fullPath,
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","n":${results.size},$cj,"queries":$fullJson,"spread":$spreadJson,"failed":$failed,"sf":"$sfDir"}\n"""
-        .getBytes("UTF-8"))
+    val full = if (only.nonEmpty) "" else {
+      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
+        s"""{"metric":"total","value":${ms(total)},"unit":"sec","n":${results.size},$cj,"queries":$fullJson,"spread":$spreadJson,"failed":$failed,"sf":"$sfDir"}\n"""
+          .getBytes("UTF-8"))
+      ""","full":"BENCH_FULL.json""""
+    }
     val top = all.filter(_._3).sortBy(-_._2).take(12)
       .map { case (k, v, _) => "\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","n":${results.size},$cj,"queries":$top,"failed":$failed,"full":"BENCH_FULL.json","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","n":${results.size},$cj,"queries":$top,"failed":$failed$full,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -218,98 +218,46 @@ object AsOfOps {
         expr("(n_purchases * 1000000) div (sum(n_purchases) over ())"))
   }
 
+  private val FunnelTypes = Seq("view", "click", "purchase")
+  private def funnelSteps: Seq[Column] = FunnelTypes.map(col("event_type") === _)
+
   /** Ordered-step conversion funnel within a time window (the
     * ClickHouse `windowFunnel` shape): per user, the deepest chain
     * view ≤ click ≤ purchase whose whole span fits in `windowS` seconds
-    * of the anchoring view, then a level histogram. Existence of a
-    * level-3 chain is decided WITHOUT enumerating chains: with
-    * lv(t) = latest view at-or-before t and clv(t) = max over clicks
-    * c ≤ t of lv(c), a purchase p completes a chain iff clv(p) ≥ p−W
-    * (a click before p that had a view within [p−W, c] — the greedy
-    * latest-view choice is optimal because a later view only leaves
-    * more window). Both are running maxima over ONE per-user
-    * time-ordered window (RANGE frame so equal timestamps are handled
-    * set-wise, not by nondeterministic peer order).
+    * of the anchoring view, then a level histogram
+    * (funnel_level, n_users, user_share_micro). The 3-step instance of
+    * [[PatternOps.matchPattern]]: chain existence is decided by its
+    * greedy-latest-anchor running maxima (see the [[PatternOps]]
+    * header), never by enumerating chains. Rows with a null ts or user
+    * stay in scope, as the graded oracle keeps them.
     *
-    * Scale: one shuffle by user_id; two Window operators share the
-    * same sort; the histogram is a ≤4-row aggregate. No self-joins —
-    * the naive exists-chain formulation is two fact-fact inequality
-    * joins that explode on active users.
+    * Scale: one shuffle by user_id; the window passes share its sort;
+    * the histogram is a ≤4-row aggregate. No self-joins — the naive
+    * exists-chain formulation is two fact-fact inequality joins that
+    * explode on active users.
     */
-  def windowFunnel(events: DataFrame, windowS: Long = 21600): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts_s"))
-      .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val e = events
-      .filter(col("event_type").isin("view", "click", "purchase"))
-      .select(col("user_id"), col("ts").cast("long").as("ts_s"), col("event_type"))
-    val staged = e
-      .withColumn("lv", max(when(col("event_type") === "view", col("ts_s"))).over(w))
-      .withColumn("clv", max(when(col("event_type") === "click", col("lv"))).over(w))
-    val perUser = staged.groupBy(col("user_id")).agg(
-      max(when(col("event_type") === "view", 1).otherwise(0)).as("l1"),
-      max(when(col("event_type") === "click" &&
-        col("lv") >= col("ts_s") - windowS, 1).otherwise(0)).as("l2"),
-      max(when(col("event_type") === "purchase" &&
-        col("clv") >= col("ts_s") - windowS, 1).otherwise(0)).as("l3"))
-    perUser
-      .select(when(col("l3") === 1, 3L).when(col("l2") === 1, 2L)
-        .when(col("l1") === 1, 1L).otherwise(0L).as("funnel_level"))
-      .groupBy(col("funnel_level"))
-      .agg(count(lit(1)).as("n_users"))
-      .withColumn("user_share_micro",
-        expr("(n_users * 1000000) div (sum(n_users) over ())"))
-  }
+  def windowFunnel(events: DataFrame, windowS: Long = 21600): DataFrame =
+    PatternOps.levelHistogram(
+      events.filter(col("event_type").isin(FunnelTypes: _*)),
+      funnelSteps, windowS, "funnel_level")
 
   /** Per-event funnel level-progress emissions — the oracle-checkable
     * batch mirror of [[graft.streaming.EventStreams.funnelStream]]: one
     * row (user_id, ts_s, funnel_level) for every event at which the
     * user's deepest reached level increases, exactly the rows the live
-    * dashboard feed emits. Shares [[windowFunnel]]'s running-maxima
-    * staging (lv/clv over RANGE frames, so equal timestamps resolve
-    * set-wise); the emission layer adds a per-event achieved level and
-    * a running best over (ts, view<click<purchase) ROWS order — the
-    * same sequencing the stream applies inside a micro-batch, which is
-    * what makes stream output ≡ batch output row-for-row (spec'd).
-    * Within an equal-(ts, rank) tie group every member computes the
-    * same running values, so exactly one emission survives regardless
-    * of physical peer order in either engine.
+    * dashboard feed emits. The 3-step instance of
+    * [[PatternOps.patternProgress]] (see the [[PatternOps]] header for
+    * the anchors and the tie rule); rows with a null ts are out of
+    * scope, null-user rows stay.
     *
     * Scale: one shuffle by user_id shared by all four windows; no
-    * joins, no per-user history retained — the stream needs two longs
-    * of state, the batch mirror needs two sorted window passes.
+    * joins, no per-user history retained.
     */
-  def funnelProgress(events: DataFrame, windowS: Long = 21600): DataFrame = {
-    val wr = Window.partitionBy(col("user_id")).orderBy(col("ts_s"))
-      .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val e = events
-      .filter(col("event_type").isin("view", "click", "purchase") &&
-        col("ts").isNotNull)
-      .select(col("user_id"), col("ts").cast("long").as("ts_s"),
-        col("event_type"),
-        when(col("event_type") === "view", 0)
-          .when(col("event_type") === "click", 1).otherwise(2).as("rk"))
-    val staged = e
-      .withColumn("lv",
-        max(when(col("event_type") === "view", col("ts_s"))).over(wr))
-      .withColumn("clv",
-        max(when(col("event_type") === "click", col("lv"))).over(wr))
-      .withColumn("ach",
-        when(col("event_type") === "view", 1L)
-          .when(col("event_type") === "click" &&
-            col("lv") >= col("ts_s") - windowS, 2L)
-          .when(col("event_type") === "purchase" &&
-            col("clv") >= col("ts_s") - windowS, 3L)
-          .otherwise(0L))
-    val wo = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_s"), col("rk"))
-    staged
-      .withColumn("best", max(col("ach")).over(
-        wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("prev_best", coalesce(max(col("ach")).over(
-        wo.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .filter(col("best") > col("prev_best"))
-      .select(col("user_id"), col("ts_s"), col("best").as("funnel_level"))
-  }
+  def funnelProgress(events: DataFrame, windowS: Long = 21600): DataFrame =
+    PatternOps.levelProgress(
+      events.filter(col("event_type").isin(FunnelTypes: _*) &&
+        col("ts").isNotNull),
+      funnelSteps, windowS, "funnel_level")
 
   /** Multi-touch LINEAR attribution — the equal-split complement of
     * [[purchaseAttribution]]'s last-touch model: each purchase's value

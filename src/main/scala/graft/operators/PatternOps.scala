@@ -9,8 +9,10 @@ import org.apache.spark.sql.functions._
   * per-step predicates: "did the user do step₁, then step₂, …, then
   * stepₙ, in order, with the whole chain inside `windowS` seconds of the
   * step₁ anchor?" (the reference's notebooks answer the 3-step
-  * view→click→purchase instance by eye; [[AsOfOps.windowFunnel]] hard-
-  * codes it; this operator takes the pattern as data).
+  * view→click→purchase instance by eye; [[AsOfOps.windowFunnel]] and
+  * [[AsOfOps.funnelProgress]] are that instance of these operators).
+  * This is the batch engine's one chain matcher; the stream's one is
+  * [[graft.streaming.EventStreams.patternStream]].
   *
   * Compilation — running-maxima windows, NEVER an N-way self-join chain
   * (the naive MATCH_RECOGNIZE plan, O(matchesᴺ) at 100 TB):
@@ -31,27 +33,32 @@ import org.apache.spark.sql.functions._
   * earlier validated step-(k−1) row — the anchor propagated through
   * one), so the per-user deepest level is just max(ach).
   *
+  * Callers scope the input: rows matching no step are filtered before
+  * the shuffle, and each caller keeps its graded null policy
+  * (`window_funnel` keeps null-ts and null-user rows, `funnel_progress`
+  * drops null ts, the pattern operators drop both).
+  *
   * Scale: ONE shuffle by user_id shared by all N−1 window passes and the
-  * final per-user aggregate; predicates evaluate inside the scan stage;
-  * rows matching no step are filtered before the shuffle. State per row
-  * is N−1 longs regardless of history length.
+  * final per-user aggregate; predicates evaluate inside the scan stage.
+  * State per row is N−1 longs regardless of history length.
   */
 object PatternOps {
 
   /** Per-event staged frame: ts_s, tie-rank rk (first matching step),
-    * anchors a₁..aₙ₋₁, and the achieved level `ach` ∈ [0, n].
+    * anchors a₁..aₙ₋₁, and the achieved level `ach` ∈ [0, n]. `events`
+    * come scoped by the caller: rows matching no step already dropped
+    * (one would count as a level-0 user), and the caller's own null
+    * policy applied.
     */
-  private[graft] def staged(events: DataFrame, steps: Seq[Column],
+  private def staged(events: DataFrame, steps: Seq[Column],
       windowS: Long): DataFrame = {
     require(steps.size >= 2, "a pattern needs at least two steps")
-    val anyStep = steps.reduce(_ || _)
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts_s"))
       .rangeBetween(Window.unboundedPreceding, Window.currentRow)
     val rk = steps.tail.zipWithIndex.foldLeft(when(steps.head, 0)) {
       case (acc, (p, i)) => acc.when(p, i + 1)
     }
     val base = events
-      .filter(col("ts").isNotNull && col("user_id").isNotNull && anyStep)
       .withColumn("ts_s", col("ts").cast("long"))
       .withColumn("rk", rk)
     val anchored = steps.indices.tail.foldLeft(
@@ -71,30 +78,26 @@ object PatternOps {
     anchored.withColumn("ach", ach.cast("long"))
   }
 
-  /** Per-user deepest-reached-level histogram — the
-    * [[AsOfOps.windowFunnel]] verdict shape for an arbitrary pattern:
-    * (pattern_level, n_users, user_share_micro), level 0 = the user has
+  /** Per-user deepest-reached-level histogram of scoped `events`:
+    * (`level`, n_users, user_share_micro), level 0 = the user has
     * step-matching rows but never a step-1 anchor.
     */
-  def matchPattern(events: DataFrame, steps: Seq[Column],
-      windowS: Long): DataFrame =
+  private[operators] def levelHistogram(events: DataFrame, steps: Seq[Column],
+      windowS: Long, level: String): DataFrame =
     staged(events, steps, windowS)
-      .groupBy(col("user_id")).agg(max(col("ach")).as("pattern_level"))
-      .groupBy(col("pattern_level")).agg(count(lit(1)).as("n_users"))
+      .groupBy(col("user_id")).agg(max(col("ach")).as(level))
+      .groupBy(col(level)).agg(count(lit(1)).as("n_users"))
       .withColumn("user_share_micro",
         expr("(n_users * 1000000) div (sum(n_users) over ())"))
 
-  /** Per-event level-progress emissions — one row (user_id, ts_s,
-    * pattern_level) whenever the user's deepest reached level increases;
-    * the oracle-checkable batch mirror of
-    * [[graft.streaming.EventStreams.patternStream]] (same construction
-    * as [[AsOfOps.funnelProgress]]: RANGE-staged anchors, then a running
-    * best over (ts, first-matching-step) ROWS order — within an
-    * equal-(ts, rk) tie group every member computes the same running
-    * values, so exactly one emission survives in either engine).
+  /** Level-progress emissions of scoped `events`: one row (user_id,
+    * ts_s, `level`) whenever the user's deepest reached level increases
+    * — a running best over (ts, first-matching-step) ROWS order. Within
+    * an equal-(ts, rk) tie group every member computes the same running
+    * values, so exactly one emission survives in either engine.
     */
-  def patternProgress(events: DataFrame, steps: Seq[Column],
-      windowS: Long): DataFrame = {
+  private[operators] def levelProgress(events: DataFrame, steps: Seq[Column],
+      windowS: Long, level: String): DataFrame = {
     val wo = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_s"), col("rk"))
     staged(events, steps, windowS)
@@ -103,8 +106,32 @@ object PatternOps {
       .withColumn("prev_best", coalesce(max(col("ach")).over(
         wo.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .filter(col("best") > col("prev_best"))
-      .select(col("user_id"), col("ts_s"), col("best").as("pattern_level"))
+      .select(col("user_id"), col("ts_s"), col("best").as(level))
   }
+
+  /** The pattern operators' scope: rows matching some step, with both a
+    * timestamp and a user.
+    */
+  private def scoped(events: DataFrame, steps: Seq[Column]): DataFrame =
+    events.filter(col("ts").isNotNull && col("user_id").isNotNull &&
+      steps.reduce(_ || _))
+
+  /** Per-user deepest-reached-level histogram — the
+    * [[AsOfOps.windowFunnel]] verdict shape for an arbitrary pattern:
+    * (pattern_level, n_users, user_share_micro).
+    */
+  def matchPattern(events: DataFrame, steps: Seq[Column],
+      windowS: Long): DataFrame =
+    levelHistogram(scoped(events, steps), steps, windowS, "pattern_level")
+
+  /** Per-event level-progress emissions — one row (user_id, ts_s,
+    * pattern_level) whenever the user's deepest reached level increases;
+    * the oracle-checkable batch mirror of
+    * [[graft.streaming.EventStreams.patternStream]].
+    */
+  def patternProgress(events: DataFrame, steps: Seq[Column],
+      windowS: Long): DataFrame =
+    levelProgress(scoped(events, steps), steps, windowS, "pattern_level")
 
   /** The graded 4-step instance over the events table: signup → view →
     * high-value click (value ≥ 10) → purchase, chain within 3 days of

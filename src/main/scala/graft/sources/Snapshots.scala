@@ -22,6 +22,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   *  - `_model-vNNNNN`: the ANN model paired with snapshots from N on;
   *  - `<gen>pNNNN.parquet`: the parts of one file generation.
   *
+  * A foreachBatch writer marks each committed micro-batch in an
+  * `<out>-commits` sibling of its output.
+  *
   * A keyed store is rewritten whole through `<store>-staging-<token>`
   * and `<store>-retired-<token>` siblings; a single-manifest directory
   * carries `_manifest`, a zone-mapped one `_stats`.
@@ -226,6 +229,28 @@ private[graft] object Snapshots {
     }
     fs.delete(tmp, true)
     names
+  }
+
+  // ------------------------------------------------------ batch markers
+
+  /** A foreachBatch writer's replay marker for `batchId`,
+    * `<out>-commits/batch-<id>`: it lives NEXT TO the output, on the
+    * output path's own filesystem (hdfs:// and s3a:// included) — a
+    * driver-local marker under a remote output path is invalid (or
+    * silently lands on local disk) and breaks replay idempotency.
+    */
+  def markerPath(out: String, batchId: Long): Path =
+    new Path(s"$out-commits", s"batch-$batchId")
+
+  def markerExists(batch: DataFrame, marker: Path): Boolean =
+    marker.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+      .exists(marker)
+
+  def writeMarker(batch: DataFrame, marker: Path): Unit = {
+    val fs = marker.getFileSystem(
+      batch.sparkSession.sparkContext.hadoopConfiguration)
+    fs.mkdirs(marker.getParent)
+    fs.create(marker, true).close()
   }
 
   // ------------------------------------------------------ claim, publish

@@ -38,18 +38,8 @@ object EventStreams {
     * then per-user session stats. Second-floored epochs for oracle parity
     * (events.parquet is ns-precision; engines truncate differently).
     */
-  def sessionizeBatch(events: DataFrame, gapSeconds: Long = 1800): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val sessions = events
-      .select(col("user_id"), col("event_id"), col("ts"),
-        col("ts").cast("long").as("ts_s"))
-      .withColumn("prev_s", lag(col("ts_s"), 1).over(byUser))
-      .withColumn("new_session",
-        when(col("prev_s").isNull || col("ts_s") - col("prev_s") > gapSeconds, 1L)
-          .otherwise(0L))
-      .withColumn("session_id",
-        sum(col("new_session")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
-    sessions
+  def sessionizeBatch(events: DataFrame, gapSeconds: Long = 1800): DataFrame =
+    withSessionIds(events, gapSeconds)
       .groupBy(col("user_id"), col("session_id"))
       .agg(
         count(lit(1)).as("n_events"),
@@ -61,6 +51,24 @@ object EventStreams {
         max(col("duration_s")).as("max_session_s"),
         round(sum(col("n_events")).cast("double") / count(lit(1)).cast("double"), 4)
           .as("avg_events_per_session"))
+
+  /** The events' (user_id, event_id, ts, `extra`…, ts_s) with a per-user
+    * `session_id`: a new session starts wherever the gap to the user's
+    * previous event exceeds `gapSeconds` — lag + running sum over one
+    * user-partitioned sort.
+    */
+  private def withSessionIds(events: DataFrame, gapSeconds: Long,
+      extra: String*): DataFrame = {
+    val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    events
+      .select((Seq("user_id", "event_id", "ts") ++ extra).map(col) :+
+        col("ts").cast("long").as("ts_s"): _*)
+      .withColumn("prev_s", lag(col("ts_s"), 1).over(byUser))
+      .withColumn("new_session",
+        when(col("prev_s").isNull || col("ts_s") - col("prev_s") > gapSeconds, 1L)
+          .otherwise(0L))
+      .withColumn("session_id",
+        sum(col("new_session")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
   }
 
   /** Top session paths — the most common opening event sequences (first
@@ -77,19 +85,9 @@ object EventStreams {
     */
   def sessionPathsBatch(events: DataFrame, gapSeconds: Long = 1800,
       pathLen: Int = 5, topK: Int = 20): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val sess = events
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),
-        col("ts").cast("long").as("ts_s"))
-      .withColumn("prev_s", lag(col("ts_s"), 1).over(byUser))
-      .withColumn("new_session",
-        when(col("prev_s").isNull || col("ts_s") - col("prev_s") > gapSeconds, 1L)
-          .otherwise(0L))
-      .withColumn("session_id",
-        sum(col("new_session")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
     val bySess = Window.partitionBy(col("user_id"), col("session_id"))
       .orderBy(col("ts"), col("event_id"))
-    sess
+    withSessionIds(events, gapSeconds, "event_type")
       .withColumn("rnk", row_number().over(bySess))
       .filter(col("rnk") <= pathLen)
       .groupBy(col("user_id"), col("session_id"))
@@ -201,17 +199,8 @@ object EventStreams {
     * watermark passes the bound — constant state per user-hour at any
     * throughput. Same output as [[intervalJoinBatch]].
     */
-  def intervalJoinStream(purchases: DataFrame, signups: DataFrame): DataFrame = {
-    val p = purchases.withWatermark("p_ts", "10 minutes")
-    val s = signups.withWatermark("s_ts", "2 hours")
-    p.join(s,
-      p("user_id") === s("user_id") &&
-        s("s_ts") <= p("p_ts") &&
-        s("s_ts") >= p("p_ts") - expr("INTERVAL 1 HOUR"))
-      .select(p("user_id"), col("purchase_id"), col("signup_id"),
-        col("purchase_value"),
-        (col("p_ts").cast("long") - col("s_ts").cast("long")).as("lag_seconds"))
-  }
+  def intervalJoinStream(purchases: DataFrame, signups: DataFrame): DataFrame =
+    watermarkedIntervalJoin(purchases, signups, "inner")
 
   /** LEFT OUTER stream-stream interval join: every purchase emits —
     * matched rows immediately, UNMATCHED purchases as null-signup rows
@@ -221,14 +210,18 @@ object EventStreams {
     * while keeping the same bounded per-user-hour state (eviction and
     * null emission both ride the watermark).
     */
-  def intervalJoinOuterStream(purchases: DataFrame, signups: DataFrame): DataFrame = {
+  def intervalJoinOuterStream(purchases: DataFrame, signups: DataFrame): DataFrame =
+    watermarkedIntervalJoin(purchases, signups, "left_outer")
+
+  private def watermarkedIntervalJoin(purchases: DataFrame,
+      signups: DataFrame, joinType: String): DataFrame = {
     val p = purchases.withWatermark("p_ts", "10 minutes")
     val s = signups.withWatermark("s_ts", "2 hours")
     p.join(s,
       p("user_id") === s("user_id") &&
         s("s_ts") <= p("p_ts") &&
         s("s_ts") >= p("p_ts") - expr("INTERVAL 1 HOUR"),
-      "left_outer")
+      joinType)
       .select(p("user_id"), col("purchase_id"), col("signup_id"),
         col("purchase_value"),
         (col("p_ts").cast("long") - col("s_ts").cast("long")).as("lag_seconds"))
@@ -355,27 +348,6 @@ object EventStreams {
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts_s"))
   }
 
-  /** Replay-idempotency batch markers live NEXT TO the output, on the
-    * OUTPUT path's own filesystem (hdfs:// and s3a:// included),
-    * resolved through the Hadoop FileSystem API the way Sinks resolves
-    * its snapshot manifests — a driver-local java.nio marker under a
-    * remote output path is invalid (or silently lands on local disk)
-    * and breaks replay idempotency.
-    */
-  private def markerPath(outPath: String, batchId: Long): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$outPath-commits", s"batch-$batchId")
-
-  private def markerExists(batch: DataFrame,
-      p: org.apache.hadoop.fs.Path): Boolean =
-    p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration).exists(p)
-
-  private def writeMarker(batch: DataFrame,
-      p: org.apache.hadoop.fs.Path): Unit = {
-    val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
-  }
-
   /** Streaming incremental dimension maintenance — the reference's
     * Airflow load_dim_date / dim-upsert loop (nyc_hybrid_etl_pipeline.py:
     * 141-180) as a foreachBatch stream: each micro-batch anti-joins its
@@ -397,8 +369,8 @@ object EventStreams {
       .writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = markerPath(dimPath, batchId)
-        if (!markerExists(batch, marker)) {
+        val marker = graft.sources.Snapshots.markerPath(dimPath, batchId)
+        if (!graft.sources.Snapshots.markerExists(batch, marker)) {
           val spark = batch.sparkSession
           val incoming = batch.select(col("user_id")).distinct()
           // "no store yet" is an EXPLICIT existence check (the
@@ -413,7 +385,7 @@ object EventStreams {
                 Seq("user_id"), "left_anti")
             else incoming
           fresh.write.mode("append").parquet(dimPath)
-          writeMarker(batch, marker)
+          graft.sources.Snapshots.writeMarker(batch, marker)
         }
         ()
       }
@@ -598,31 +570,10 @@ object EventStreams {
     // corrupt the layout
     graft.sources.Snapshots.requireToken(streamId,
       "statsDriftStream needs a plain-token streamId")
-    rows
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = markerPath(s"$reportPath-$streamId", batchId)
-        if (!markerExists(batch, marker) && !batch.isEmpty) {
-          val spark = batch.sparkSession
-          val dir = new org.apache.hadoop.fs.Path(reportPath)
-          val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          // a crashed previous attempt of THIS generation is cleared
-          // before the rename (deterministic names make it recognizable,
-          // matched by FULL name so a hyphenated sibling stream's
-          // generation is never adopted or deleted)
-          val baseline = spark.read.parquet(baselinePath)
-          graft.sources.Snapshots.stageGeneration(fs, dir,
-              graft.sources.Snapshots.batchGen("drift", streamId, batchId),
-              "drift report") { tmp =>
-            graft.operators.AuditOps.statsDrift(baseline, batch, cols)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
-          }
-          writeMarker(batch, marker)
-        }
-        ()
-      }
+    reportStream(rows, reportPath, streamId, "drift") { batch =>
+      val baseline = batch.sparkSession.read.parquet(baselinePath)
+      graft.operators.AuditOps.statsDrift(baseline, batch, cols)
+    }
   }
 
   /** Streaming distribution-drift monitoring: each micro-batch's value
@@ -644,35 +595,18 @@ object EventStreams {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     graft.sources.Snapshots.requireToken(streamId,
       "ksDriftStream needs a plain-token streamId")
-    rows
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = markerPath(s"$reportPath-$streamId", batchId)
-        if (!markerExists(batch, marker) && !batch.isEmpty) {
-          val spark = batch.sparkSession
-          val dir = new org.apache.hadoop.fs.Path(reportPath)
-          val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          def quant(df: DataFrame, a: Long, b: Long) = df
-            .select(floor(col(valueCol)).cast("long").as("v"),
-              lit(a).as("ea"), lit(b).as("eb"))
-          val byV = quant(spark.read.parquet(baselinePath), 1L, 0L)
-            .unionByName(quant(batch, 0L, 1L))
-            .groupBy(col("v"))
-            .agg(sum(col("ea")).as("a"), sum(col("eb")).as("b"))
-          graft.sources.Snapshots.stageGeneration(fs, dir,
-              graft.sources.Snapshots.batchGen("ks", streamId, batchId),
-              "ks report") { tmp =>
-            graft.operators.StatOps.ksFromCounts(byV)
-              .select(col("n_a").as("n_base"), col("n_b").as("n_batch"),
-                col("ks_at_v"), col("d_micro"))
-              .withColumn("batch_id", lit(batchId))
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
-          }
-          writeMarker(batch, marker)
-        }
-        ()
-      }
+    reportStream(rows, reportPath, streamId, "ks") { batch =>
+      def quant(df: DataFrame, a: Long, b: Long) = df
+        .select(floor(col(valueCol)).cast("long").as("v"),
+          lit(a).as("ea"), lit(b).as("eb"))
+      val byV = quant(batch.sparkSession.read.parquet(baselinePath), 1L, 0L)
+        .unionByName(quant(batch, 0L, 1L))
+        .groupBy(col("v"))
+        .agg(sum(col("ea")).as("a"), sum(col("eb")).as("b"))
+      graft.operators.StatOps.ksFromCounts(byV)
+        .select(col("n_a").as("n_base"), col("n_b").as("n_batch"),
+          col("ks_at_v"), col("d_micro"))
+    }
   }
 
   /** Streaming feed-gap monitoring — the LIVE third of the backfill
@@ -702,37 +636,51 @@ object EventStreams {
     graft.sources.Snapshots.requireToken(streamId,
       "gapMonitorStream needs a plain-token streamId")
     require(bucketSeconds > 0 && maxBuckets > 0)
+    reportStream(rows, reportPath, streamId, "gap") { batch =>
+      val buckets = batch
+        .select(expr(s"cast($tsCol as long) div $bucketSeconds").as("bkt"))
+      val present = buckets.groupBy(col("bkt")).agg(count(lit(1)).as("n"))
+      val spine = buckets
+        .agg(min(col("bkt")).as("lo"), max(col("bkt")).as("hi"))
+        .select(greatest(col("lo"), col("hi") - lit(maxBuckets)).as("lo"),
+          col("hi"))
+        .select(explode(expr("sequence(lo, hi)")).as("bkt"))
+      spine.join(present, Seq("bkt"), "left_anti")
+        .select((col("bkt") * bucketSeconds).as("bucket_start_s"))
+    }
+  }
+
+  /** The report streams' one foreachBatch body, with the replay
+    * discipline [[statsDriftStream]] describes: a non-empty micro-batch
+    * below its marker stages `report(batch)`, tagged with the batchId,
+    * as the `kind` generation of (streamId, batch) in `reportPath`, then
+    * writes the marker.
+    */
+  private def reportStream(rows: DataFrame, reportPath: String,
+      streamId: String, kind: String)(report: DataFrame => DataFrame)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     rows
       .writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = markerPath(s"$reportPath-$streamId", batchId)
-        if (!markerExists(batch, marker) && !batch.isEmpty) {
-          val spark = batch.sparkSession
+        val marker = graft.sources.Snapshots
+          .markerPath(s"$reportPath-$streamId", batchId)
+        if (!graft.sources.Snapshots.markerExists(batch, marker) &&
+            !batch.isEmpty) {
           val dir = new org.apache.hadoop.fs.Path(reportPath)
-          val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val buckets = batch
-            .select(expr(s"cast($tsCol as long) div $bucketSeconds").as("bkt"))
-          val present = buckets.groupBy(col("bkt")).agg(count(lit(1)).as("n"))
-          val spine = buckets
-            .agg(min(col("bkt")).as("lo"), max(col("bkt")).as("hi"))
-            .select(greatest(col("lo"), col("hi") - lit(maxBuckets)).as("lo"),
-              col("hi"))
-            .select(explode(expr("sequence(lo, hi)")).as("bkt"))
-          val gaps = spine.join(present, Seq("bkt"), "left_anti")
-            .select((col("bkt") * bucketSeconds).as("bucket_start_s"))
-            .withColumn("batch_id", lit(batchId))
+          val fs = dir.getFileSystem(
+            batch.sparkSession.sparkContext.hadoopConfiguration)
           graft.sources.Snapshots.stageGeneration(fs, dir,
-              graft.sources.Snapshots.batchGen("gap", streamId, batchId),
-              "gap report") { tmp =>
-            gaps.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+              graft.sources.Snapshots.batchGen(kind, streamId, batchId),
+              s"$kind report") { tmp =>
+            report(batch).withColumn("batch_id", lit(batchId))
+              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
               .parquet(tmp.toString)
           }
-          writeMarker(batch, marker)
+          graft.sources.Snapshots.writeMarker(batch, marker)
         }
         ()
       }
-  }
 
   /** Continuous ANN-index maintenance: each micro-batch of vectors is
     * encoded ONCE through the IVF cell assignment + PQ coder
@@ -1124,60 +1072,25 @@ object EventStreams {
   }
 
   case class FunnelEvent(user_id: Long, ts_s: Long, event_type: String)
-  /** lv = latest view ts, clv = max over clicks of their lv at click
-    * time, best = deepest level reached. Long.MinValue = "none yet". */
-  case class FunnelState(lv: Long, clv: Long, best: Long)
   case class FunnelProgress(user_id: Long, ts_s: Long, funnel_level: Long)
 
   /** Streaming form of [[graft.operators.AsOfOps.windowFunnel]] — live
-    * ordered-chain funnel tracking with O(1) state per user. The batch
-    * operator's running-maxima reformulation is what makes this
-    * streamable: the whole chain-existence test needs only (latest view
-    * ts, max view-ts-at-click) — two longs — so state never grows with
-    * a user's history, unlike a naive formulation that would buffer
-    * events to search for chains. Emits a row whenever a user's deepest
-    * level increases (the live funnel dashboard feed). Within a
-    * micro-batch, events sort by (ts, view<click<purchase) so
-    * equal-timestamp chains resolve exactly like the batch RANGE frame
-    * (set-wise peer inclusion); across micro-batches the state carries
-    * the maxima, so verdicts are micro-batch-split invariant for
-    * in-order feeds.
+    * ordered-chain funnel tracking with O(1) state per user: the
+    * view → click → purchase instance of [[patternStream]] (the
+    * greedy-latest-anchor argument is in the
+    * [[graft.operators.PatternOps]] header). Emits a row whenever a
+    * user's deepest level increases (the live funnel dashboard feed);
+    * verdicts are micro-batch-split invariant for in-order feeds.
     */
   def funnelStream(spark: SparkSession, events: Dataset[FunnelEvent],
       windowS: Long = 21600L): Dataset[FunnelProgress] = {
     import spark.implicits._
-    val rank = Map("view" -> 0, "click" -> 1, "purchase" -> 2)
-    events
-      .filter(e => rank.contains(e.event_type))
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelProgress](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user, batch, state: GroupState[FunnelState]) =>
-          var s = state.getOption.getOrElse(
-            FunnelState(Long.MinValue, Long.MinValue, 0L))
-          val out = batch.toSeq
-            .sortBy(e => (e.ts_s, rank(e.event_type)))
-            .flatMap { e =>
-              val before = s.best
-              e.event_type match {
-                case "view" =>
-                  s = s.copy(lv = math.max(s.lv, e.ts_s),
-                    best = math.max(s.best, 1L))
-                case "click" if s.lv != Long.MinValue =>
-                  s = s.copy(clv = math.max(s.clv, s.lv))
-                  if (s.lv >= e.ts_s - windowS)
-                    s = s.copy(best = math.max(s.best, 2L))
-                case "purchase" if s.clv != Long.MinValue =>
-                  if (s.clv >= e.ts_s - windowS)
-                    s = s.copy(best = math.max(s.best, 3L))
-                case _ => ()
-              }
-              if (s.best > before) Some(FunnelProgress(user, e.ts_s, s.best))
-              else None
-            }
-          state.update(s)
-          out.iterator
-      }
+    val steps = Seq("view", "click", "purchase")
+      .map(t => (e: PatternEvent) => e.event_type == t)
+    patternStream(spark,
+        events.map(e => PatternEvent(e.user_id, e.ts_s, e.event_type, 0.0)),
+        steps, windowS)
+      .map(p => FunnelProgress(p.user_id, p.ts_s, p.pattern_level))
   }
 
   case class PatternEvent(user_id: Long, ts_s: Long, event_type: String,
@@ -1189,8 +1102,8 @@ object EventStreams {
   case class PatternMatchState(anchors: Seq[Long], best: Long)
   case class PatternProgress(user_id: Long, ts_s: Long, pattern_level: Long)
 
-  /** The [[funnelStream]] step functions generalized — the streaming
-    * twin of [[graft.operators.PatternOps.signupFunnelSteps]], shared
+  /** The graded 4-step pattern as step functions — the streaming twin
+    * of [[graft.operators.PatternOps.signupFunnelSteps]], shared
     * with the stream≡batch mirror spec.
     */
   def signupFunnelStreamSteps: Seq[PatternEvent => Boolean] = Seq(
@@ -1201,9 +1114,9 @@ object EventStreams {
 
   /** Streaming N-step sequential pattern matcher — the live form of
     * [[graft.operators.PatternOps.patternProgress]] (MATCH_RECOGNIZE
-    * shape), generalizing [[funnelStream]] to arbitrary per-step
-    * predicates. Emits (user, ts, level) whenever a user's deepest
-    * validated chain prefix grows.
+    * shape) over arbitrary per-step predicates; [[funnelStream]] is its
+    * view → click → purchase instance. Emits (user, ts, level) whenever
+    * a user's deepest validated chain prefix grows.
     *
     * Exactly the batch RANGE-frame semantics, reproduced set-wise: the
     * micro-batch sorts by (ts, first-matching-step) and processes one
@@ -1240,35 +1153,48 @@ object EventStreams {
           val anchors = s.anchors.toArray
           var best = s.best
           val out = scala.collection.mutable.ArrayBuffer.empty[PatternProgress]
-          val sorted = batch.toSeq
-            .map(e => (e, steps.indexWhere(_(e))))
-            .sortBy { case (e, rk) => (e.ts_s, rk) }
-          var i = 0
-          while (i < sorted.length) {
-            val t = sorted(i)._1.ts_s
-            var j = i
-            while (j < sorted.length && sorted(j)._1.ts_s == t) j += 1
-            val grp = sorted.slice(i, j)
-            if (grp.exists { case (e, _) => steps.head(e) })
-              anchors(0) = math.max(anchors(0), t)
-            for (k <- 1 until n - 1)
-              if (anchors(k - 1) != Long.MinValue &&
-                  grp.exists { case (e, _) => steps(k)(e) })
-                anchors(k) = math.max(anchors(k), anchors(k - 1))
-            for ((e, _) <- grp) { // grp is rk-sorted: batch ROWS order
-              var ach = 0L
-              for (k <- 0 until n)
-                if (steps(k)(e) && (k == 0 ||
-                    (anchors(k - 1) != Long.MinValue &&
-                      anchors(k - 1) >= t - windowS)))
-                  ach = (k + 1).toLong
-              if (ach > best) { best = ach; out += PatternProgress(user, t, ach) }
-            }
-            i = j
+          chainPass(batch, steps, windowS, anchors) { (t, ach) =>
+            if (ach > best) { best = ach; out += PatternProgress(user, t, ach) }
           }
           state.update(PatternMatchState(anchors.toSeq, best))
           out.iterator
       }
+  }
+
+  /** The stream engine's one chain matcher: one micro-batch of a user's
+    * events through the timestamp-group pass [[patternStream]]
+    * describes, advancing `anchors` in place, then handing `member` each
+    * event's ts and achieved level in (ts, first-matching-step) order.
+    * Members read the LIVE anchors, so a `member` that resets them (a
+    * completed attempt) is seen by the rest of its group.
+    */
+  private def chainPass(batch: Iterator[PatternEvent],
+      steps: Seq[PatternEvent => Boolean], windowS: Long,
+      anchors: Array[Long])(member: (Long, Long) => Unit): Unit = {
+    val n = steps.size
+    val sorted = batch.map(e => (e, steps.indexWhere(_(e)))).toSeq
+      .sortBy { case (e, rk) => (e.ts_s, rk) }.map(_._1)
+    var i = 0
+    while (i < sorted.length) {
+      val t = sorted(i).ts_s
+      var j = i
+      while (j < sorted.length && sorted(j).ts_s == t) j += 1
+      val grp = sorted.slice(i, j)
+      if (grp.exists(steps.head)) anchors(0) = math.max(anchors(0), t)
+      for (k <- 1 until n - 1)
+        if (anchors(k - 1) != Long.MinValue && grp.exists(steps(k)))
+          anchors(k) = math.max(anchors(k), anchors(k - 1))
+      for (e <- grp) { // grp is rk-sorted: batch ROWS order
+        var ach = 0L
+        for (k <- 0 until n)
+          if (steps(k)(e) && (k == 0 ||
+              (anchors(k - 1) != Long.MinValue &&
+                anchors(k - 1) >= t - windowS)))
+            ach = (k + 1).toLong
+        member(t, ach)
+      }
+      i = j
+    }
   }
 
   case class PatternEv(user_id: Long, ts: java.sql.Timestamp,
@@ -1335,40 +1261,16 @@ object EventStreams {
             val anchors = s.anchors.toArray
             var best = s.best
             val out = scala.collection.mutable.ArrayBuffer.empty[PatternOutcome]
-            // identical group-at-a-time chain semantics as patternStream
-            val sorted = batch.toSeq.map(asEvent)
-              .map(e => (e, steps.indexWhere(_(e))))
-              .sortBy { case (e, rk) => (e.ts_s, rk) }
-            var i = 0
-            while (i < sorted.length) {
-              val t = sorted(i)._1.ts_s
-              var j = i
-              while (j < sorted.length && sorted(j)._1.ts_s == t) j += 1
-              val grp = sorted.slice(i, j)
-              if (grp.exists { case (e, _) => steps.head(e) })
-                anchors(0) = math.max(anchors(0), t)
-              for (k <- 1 until n - 1)
-                if (anchors(k - 1) != Long.MinValue &&
-                    grp.exists { case (e, _) => steps(k)(e) })
-                  anchors(k) = math.max(anchors(k), anchors(k - 1))
-              for ((e, _) <- grp) {
-                var ach = 0L
-                for (k <- 0 until n)
-                  if (steps(k)(e) && (k == 0 ||
-                      (anchors(k - 1) != Long.MinValue &&
-                        anchors(k - 1) >= t - windowS)))
-                    ach = (k + 1).toLong
-                if (ach > best) {
-                  best = ach
-                  if (ach == n) {
-                    out += PatternOutcome(user, t, ach, "matched")
-                    // attempt done: a later step-1 starts a fresh one
-                    java.util.Arrays.fill(anchors, Long.MinValue)
-                    best = 0L
-                  } else out += PatternOutcome(user, t, ach, "progress")
-                }
+            chainPass(batch.map(asEvent), steps, windowS, anchors) { (t, ach) =>
+              if (ach > best) {
+                best = ach
+                if (ach == n) {
+                  out += PatternOutcome(user, t, ach, "matched")
+                  // attempt done: a later step-1 starts a fresh one
+                  java.util.Arrays.fill(anchors, Long.MinValue)
+                  best = 0L
+                } else out += PatternOutcome(user, t, ach, "progress")
               }
-              i = j
             }
             if (anchors(0) != Long.MinValue) {
               state.update(PatternMatchState(anchors.toSeq, best))

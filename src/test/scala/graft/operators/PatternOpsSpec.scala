@@ -98,6 +98,39 @@ class PatternOpsSpec extends SparkSpec {
     assert(out.toSeq == Seq((1L, 0L, 1L), (1L, 5L, 2L)))
   }
 
+  test("funnel and pattern operators keep their own null policies on one dirty input") {
+    // u1 full chain, u2 click out of window, u3 only a null-ts view, and
+    // a null-user view+click
+    val df = Seq[(Option[Long], Option[Long], String)](
+      (Some(1L), Some(0L), "view"), (Some(1L), Some(10L), "click"),
+      (Some(1L), Some(20L), "purchase"),
+      (Some(2L), Some(0L), "view"), (Some(2L), Some(500L), "click"),
+      (Some(3L), None, "view"),
+      (None, Some(0L), "view"), (None, Some(10L), "click"))
+      .map { case (u, s, t) => (u, s.map(x => new Timestamp(x * 1000)), t, 0.0) }
+      .toDF("user_id", "ts", "event_type", "value")
+    val funnel = Seq("view", "click", "purchase").map(col("event_type") === _)
+    def hist(out: org.apache.spark.sql.DataFrame) = out.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    def progress(out: org.apache.spark.sql.DataFrame) = out.collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1),
+        r.getLong(2))).toSet
+    // window_funnel keeps null-ts and null-user rows: u3 reaches 1 on
+    // its null-ts view, the null user is one more user at level 2
+    assert(hist(AsOfOps.windowFunnel(df, windowS = 100L)) ==
+      Set((1L, 2L, 500000L), (2L, 1L, 250000L), (3L, 1L, 250000L)))
+    // funnel_progress drops null ts only: u3 is gone, the null user stays
+    assert(progress(AsOfOps.funnelProgress(df, windowS = 100L)) == Set(
+      (Some(1L), 0L, 1L), (Some(1L), 10L, 2L), (Some(1L), 20L, 3L),
+      (Some(2L), 0L, 1L), (None, 0L, 1L), (None, 10L, 2L)))
+    // the pattern operators drop both: only u1 and u2 remain
+    assert(hist(PatternOps.matchPattern(df, funnel, windowS = 100L)) ==
+      Set((1L, 1L, 500000L), (3L, 1L, 500000L)))
+    assert(progress(PatternOps.patternProgress(df, funnel, windowS = 100L)) ==
+      Set((Some(1L), 0L, 1L), (Some(1L), 10L, 2L), (Some(1L), 20L, 3L),
+        (Some(2L), 0L, 1L)))
+  }
+
   test("matchPattern shuffles once: all windows share the user partition") {
     val df = ev((1, 0, "signup", 0.0), (1, 10, "view", 0.0))
     val plan = PatternOps.matchPattern(df, steps, windowS = 100L)

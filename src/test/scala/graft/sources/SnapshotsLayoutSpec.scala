@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SnapshotsLayoutSpec extends AnyFunSuite {
 
   private val layout = Seq("_manifest", "_claim-v", "_tag-", "_rewrite-v",
-    "_model-v", "-staging-", "matches(\"[A-Za-z0-9")
+    "_model-v", "-staging-", "-commits", "matches(\"[A-Za-z0-9")
 
   /** The file's lines without Scaladoc, block or line comments. */
   private def codeLines(f: java.io.File): Seq[String] = {

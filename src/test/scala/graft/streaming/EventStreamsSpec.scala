@@ -296,9 +296,18 @@ class EventStreamsSpec extends SparkSpec {
     mem.addData(PatternEv(4, st(2010), "signup", 0.0),
       PatternEv(4, st(2200), "view", 0.0))
     q.processAllAvailable()
-    // a fresh u2 attempt AFTER expiry re-reports from level 1
-    mem.addData(PatternEv(2, st(3000), "signup", 0.0))
+    // a fresh u2 attempt AFTER expiry re-reports from level 1; u5's
+    // chain completes on two equal-ts purchases — the first one's match
+    // resets the attempt, and the second must see that reset
+    mem.addData(PatternEv(2, st(3000), "signup", 0.0),
+      PatternEv(5, st(2900), "signup", 0.0), PatternEv(5, st(2910), "view", 0.0),
+      PatternEv(5, st(2920), "click", 50.0),
+      PatternEv(5, st(2930), "purchase", 0.0),
+      PatternEv(5, st(2930), "purchase", 0.0))
     q.processAllAvailable(); q.stop()
+    assert(spark.table("patexp")
+      .filter(col("user_id") === 5L && col("status") === "matched")
+      .count() == 1)
     val rows = spark.table("patexp").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
     assert(rows.contains((1L, 1030L, 4L, "matched")))        // cross-split match

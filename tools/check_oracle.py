@@ -4,6 +4,7 @@ sbt, then execute each oracle SQL in DuckDB over the same testdata and
 compare row counts, column names, and a canonical value hash.
 
 Usage: python3 tools/check_oracle.py [sfdir] [outdir] [--skip-verify] [query...]
+Named queries limit both the Spark run and the compare.
 """
 import duckdb, glob, hashlib, json, math, os, subprocess, sys
 
@@ -13,9 +14,11 @@ flags = [a for a in sys.argv[3:]]
 only = [a for a in flags if not a.startswith("--")]
 
 if "--skip-verify" not in flags:
+    # trailing names limit the Spark run too; none runs every query
     r = subprocess.run(
-        ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
-        cwd="/root/repo", capture_output=True, text=True)
+        ["sbt", "-batch", " ".join(["runMain graft.Verify", SF, OUT] + only)],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True)
     tail = "\n".join((r.stdout + r.stderr).splitlines()[-15:])
     if r.returncode != 0:
         print(tail); sys.exit(1)
