@@ -156,7 +156,13 @@ object Bench {
     // each (the committed convention is runs:3 + STRICT=1).
     // A named subset re-times a few queries only: it must not replace
     // the full-run snapshot, so it prints the summary line alone.
-    val cj = s""""contended_jvms":${contended.length},"runs":$iters"""
+    // stamps: the core count, the JVM's max heap in bytes and the commit
+    // (the 8- and 32-core snapshots once looked alike in the file)
+    val gitSha = try sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+      .!!(sys.process.ProcessLogger(_ => ())).trim
+      catch { case _: Exception => "unknown" }
+    val cj = s""""contended_jvms":${contended.length},"runs":$iters,""" +
+      s""""cpus":$cpus,"heap":${Runtime.getRuntime.maxMemory},"git_sha":"$gitSha""""
     val full = if (only.nonEmpty) "" else {
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
         s"""{"metric":"total","value":${ms(total)},"unit":"sec","n":${results.size},$cj,"queries":$fullJson,"spread":$spreadJson,"failed":$failed,"sf":"$sfDir"}\n"""

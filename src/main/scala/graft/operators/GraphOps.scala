@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** Graph analytics over warehouse entities. Connected components
   * (DedupOps.dedupClusters) covers the equivalence-class family; here
@@ -13,15 +15,21 @@ import org.apache.spark.sql.functions._
   * iteration is `contrib = r div outdeg` per edge, `r' = base +
   * (85·Σcontrib) div 100` per node — no float accumulation, so the
   * fixed-iteration result is engine-stable and the DuckDB oracle unrolls
-  * the same five iterations as a CTE chain, bit for bit.
+  * the same five iterations as a CTE chain, bit for bit (Spark `div` and
+  * Scala `Long /` both truncate).
   *
-  * Scale: the fact-sized work is ONE pass building the distinct
-  * nation-pair edge list (two broadcast dim joins + one fact-fact join
-  * on orderkey); the iterations run over the NATION-sized rank table ×
-  * the ≤|nations|² edge list — driver-loop of 5 tiny joins, no
-  * checkpointing needed because every iteration's input is dim-bounded.
-  * The edge lists (and HITS's per-round scores) are pinned with
-  * [[Memo.managedCheckpoint]], so `Memo.releaseManaged()` frees them.
+  * Scale: the fact-sized work is ONE Memo-shared pass building the
+  * weighted nation-pair edge list ([[tradeEdgeWeights]]: two broadcast
+  * dim joins + one fact-fact join on orderkey). That list is grouped by
+  * (src, dst) over nation names, so it holds at most |nations|² rows by
+  * construction at any SF — the dimension-sized contract
+  * [[Memo.cachedModel]] already gives the driver. Each operator collects
+  * it and the nation names once, runs its fixed rounds as plain Scala
+  * on the driver and returns a local frame: no per-round jobs, pins or
+  * plans, and the result is computed when the operator is called.
+  *
+  * String order: Spark compares names as UTF-8 bytes, `String.compareTo`
+  * as UTF-16 units; the two agree on the ASCII nation names.
   */
 object GraphOps {
 
@@ -30,7 +38,7 @@ object GraphOps {
     * the supplier-side projection reduced to distinct (orderkey, src)
     * BEFORE the fact-fact join. Memoized (key = every input's plan):
     * this ≤|nations|²-row table is the ONE fact-derived input of the
-    * whole graph family (PageRank, triangles, communities, hop
+    * whole graph family (PageRank, HITS, triangles, communities, hop
     * distances), and the fact-fact join behind it is by far their
     * dominant cost — one session derives it once.
     */
@@ -57,51 +65,43 @@ object GraphOps {
         .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("cnt"))
     }
 
-  /** Distinct trade edges — a free projection of the memoized
-    * [[tradeEdgeWeights]], so the unweighted consumers (PageRank,
-    * triangles, communities) and the weighted ones (hop distances)
-    * share one fact pass.
+  /** The nation names and the weighted trade edges, collected. Edges
+    * with a null endpoint are dropped, as an equi-join on the name would.
     */
-  private def tradeEdges(lineitem: DataFrame, orders: DataFrame,
-      customer: DataFrame, supplier: DataFrame, nation: DataFrame): DataFrame =
-    tradeEdgeWeights(lineitem, orders, customer, supplier, nation)
-      .select(col("src"), col("dst"))
+  private def tradeGraph(lineitem: DataFrame, orders: DataFrame,
+      customer: DataFrame, supplier: DataFrame,
+      nation: DataFrame): (Seq[String], Seq[(String, String, Long)]) = {
+    val edges = tradeEdgeWeights(lineitem, orders, customer, supplier, nation)
+      .collect().toSeq.collect { case Row(s: String, d: String, n: Long) => (s, d, n) }
+    (nation.select(col("n_name")).collect().map(_.getString(0)).toSeq, edges)
+  }
+
+  /** `rows` as a local frame with the DDL `schema`. */
+  private def local(nation: DataFrame, schema: String, rows: Seq[Row]): DataFrame =
+    nation.sparkSession.createDataFrame(rows.asJava, StructType.fromDDL(schema))
 
   /** Five-iteration integer PageRank of nations in the trade graph.
     * Dangling mass is dropped (the standard simplified variant) — the
     * oracle mirrors the same recurrence, so the semantics are part of
-    * the contract, not an accident.
+    * the contract, not an accident. `outdeg` counts distinct edges,
+    * self-loops included.
+    *
+    * Scale: one collect of the Memo-shared edge list; the iterations are
+    * driver arithmetic over ≤ |nations|² edges.
     */
   def nationTradePagerank(lineitem: DataFrame, orders: DataFrame,
       customer: DataFrame, supplier: DataFrame, nation: DataFrame,
       iterations: Int = 5): DataFrame = {
-    val nodes = nation.select(col("n_name").as("nation"))
-    // the edge list is the only fact-derived input and every iteration
-    // re-reads it — pin the ≤|nations|² rows once so the fact joins run
-    // exactly once, not once per iteration
-    val edges = Memo.managedCheckpoint(
-      tradeEdges(lineitem, orders, customer, supplier, nation)
-        .withColumn("outdeg",
-          count(lit(1)).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("src")))))
-    val nNodes = nodes.agg(count(lit(1)).as("n_nodes"))
+    val (nodes, weighted) = tradeGraph(lineitem, orders, customer, supplier, nation)
+    val outdeg = weighted.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    val n = nodes.size.toLong
     // r0 = 10⁶ div N and base = 15·10⁴ div N, exactly as the oracle
-    var ranks = nodes.crossJoin(broadcast(nNodes))
-      .select(col("nation"), expr("1000000 div n_nodes").as("r"))
-    val base = broadcast(nNodes.select(expr("150000 div n_nodes").as("base")))
+    var ranks = nodes.map(_ -> 1000000L / n).toMap
     for (_ <- 1 to iterations) {
-      val contribs = edges
-        .join(ranks, col("src") === col("nation"))
-        .select(col("dst"), expr("r div outdeg").as("contrib"))
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("in_sum"))
-      ranks = nodes
-        .join(contribs, col("nation") === col("dst"), "left")
-        .crossJoin(base)
-        .select(col("nation"),
-          (col("base") + expr("(85 * coalesce(in_sum, 0L)) div 100")).as("r"))
+      val inSum = weighted.groupMapReduce(_._2)(e => ranks(e._1) / outdeg(e._1))(_ + _)
+      ranks = nodes.map(v => v -> (150000L / n + 85L * inSum.getOrElse(v, 0L) / 100)).toMap
     }
-    ranks.select(col("nation"), col("r").as("rank_micro"))
+    local(nation, "nation string, rank_micro bigint", nodes.map(v => Row(v, ranks(v))))
   }
 
   /** Three-iteration sum-normalized HITS (Kleinberg 1999) over the
@@ -113,76 +113,60 @@ object GraphOps {
     * SUM-normalized to 10⁶ total per round (the L1 variant — exact in
     * integer micro-units, unlike the L2 norm's sqrt; normalization
     * choice doesn't change the ranking, only the scale, and is part of
-    * the documented contract the oracle mirrors).
+    * the documented contract the oracle mirrors). A round whose total is
+    * 0 (or that has no edges) makes every score null, as the oracle's
+    * `nullif(tot, 0)` does, and null stays null.
     *
-    * Scale: one fact pass (the Memo-shared edge list); iterations are
-    * dim-bounded joins over ≤ |nations|² pinned rows. Integer div
-    * truncation each round is the same recurrence in both engines.
+    * Scale: one collect of the Memo-shared edge list; the half-rounds
+    * are driver arithmetic over ≤ |nations|² edges.
     */
   def nationTradeHits(lineitem: DataFrame, orders: DataFrame,
       customer: DataFrame, supplier: DataFrame, nation: DataFrame,
       iterations: Int = 3): DataFrame = {
-    val nodes = nation.select(col("n_name").as("nation"))
-    val edges = Memo.managedCheckpoint(
-      tradeEdges(lineitem, orders, customer, supplier, nation))
-    def normalize(raw: DataFrame, key: String, out: String): DataFrame = {
-      val tot = raw.agg(sum(col("raw")).as("tot"))
-      nodes.join(raw, col("nation") === col(key), "left")
-        .crossJoin(broadcast(tot))
-        .select(col("nation"), expr(
-          "cast((coalesce(raw, 0L) * 1000000) div nullif(tot, 0) as bigint)")
-          .as(out))
-    }
-    var h = nodes.select(col("nation"), lit(1000000L).as("h"))
-    var a = nodes.select(col("nation"), lit(1000000L).as("a"))
+    val (nodes, weighted) = tradeGraph(lineitem, orders, customer, supplier, nation)
+    // one half-round: raw(to) = Σ prev(from) over the edges, L1-normalized
+    def half(prev: Option[Map[String, Long]], from: ((String, String, Long)) => String,
+        to: ((String, String, Long)) => String): Option[Map[String, Long]] =
+      prev.flatMap { p =>
+        val raw = weighted.groupMapReduce(to)(e => p(from(e)))(_ + _)
+        val tot = raw.values.sum
+        if (tot == 0) None
+        else Some(nodes.map(v => v -> raw.getOrElse(v, 0L) * 1000000L / tot).toMap)
+      }
+    var h = Option(nodes.map(_ -> 1000000L).toMap)
+    var a = h
     for (_ <- 1 to iterations) {
-      // pin each round's 25-row score frame: `raw` feeds both the
-      // normalizer total and the join, so an unpinned chain doubles the
-      // logical plan per half-round (2⁶ leaf copies by round 3 —
-      // analysis time, not data, is what blows up)
-      a = Memo.managedCheckpoint(normalize(edges
-        .join(h.withColumnRenamed("nation", "hn"), col("src") === col("hn"))
-        .groupBy(col("dst")).agg(sum(col("h")).as("raw")), "dst", "a"))
-      h = Memo.managedCheckpoint(normalize(edges
-        .join(a.withColumnRenamed("nation", "an"), col("dst") === col("an"))
-        .groupBy(col("src")).agg(sum(col("a")).as("raw")), "src", "h"))
+      a = half(h, _._1, _._2)
+      h = half(a, _._2, _._1)
     }
-    h.join(a, Seq("nation"))
-      .select(col("nation"), col("h").as("hub_micro"),
-        col("a").as("auth_micro"))
+    def score(s: Option[Map[String, Long]], v: String): Any = s.map(_(v)).orNull
+    local(nation, "nation string, hub_micro bigint, auth_micro bigint",
+      nodes.map(v => Row(v, score(h, v), score(a, v))))
   }
 
   /** Directed-triangle (3-cycle) participation per nation — the
     * circular-trade motif count (A supplies B supplies C supplies A),
     * the graph-clustering complement to PageRank's centrality.
+    * Rotation-canonical counting (a is the lexicographic minimum of the
+    * cycle) counts each cycle once; self-loops are excluded up front so
+    * cycle nodes are distinct by construction.
     *
-    * Scale: the fact contributes exactly one pass (the shared
-    * [[tradeEdges]] derivation, pinned so the triple join re-reads the
-    * ≤|nations|² edge rows, not the fact); the cycle enumeration is a
-    * dim-bounded 3-way self-join. Rotation-canonical counting (a is the
-    * lexicographic minimum of the cycle) counts each cycle once;
-    * self-loops are excluded up front so cycle nodes are distinct by
-    * construction.
+    * Scale: one collect of the Memo-shared edge list; the cycle
+    * enumeration walks ≤ |nations|² edges on the driver.
     */
   def nationTradeTriangles(lineitem: DataFrame, orders: DataFrame,
       customer: DataFrame, supplier: DataFrame, nation: DataFrame): DataFrame = {
-    val edges = Memo.managedCheckpoint(
-      tradeEdges(lineitem, orders, customer, supplier, nation)
-        .filter(col("src") =!= col("dst")))
-    val cycles = edges.select(col("src").as("a"), col("dst").as("b"))
-      .join(edges.select(col("src").as("b2"), col("dst").as("c")),
-        col("b") === col("b2"))
-      .join(edges.select(col("src").as("c3"), col("dst").as("a3")),
-        col("c") === col("c3") && col("a3") === col("a"))
-      .filter(col("a") < col("b") && col("a") < col("c"))
-      .select(col("a"), col("b"), col("c"))
-    val participation = cycles
-      .select(explode(array(col("a"), col("b"), col("c"))).as("nation"))
-      .groupBy(col("nation"))
-      .agg(count(lit(1)).as("n_cycles"))
-    nation.select(col("n_name").as("nation"))
-      .join(participation, Seq("nation"), "left")
-      .select(col("nation"), coalesce(col("n_cycles"), lit(0L)).as("n_cycles"))
+    val (nodes, weighted) = tradeGraph(lineitem, orders, customer, supplier, nation)
+    val edges = weighted.collect { case (s, d, _) if s != d => (s, d) }
+    val out = edges.groupMap(_._1)(_._2)
+    val edgeSet = edges.toSet
+    val cycles = for {
+      (a, b) <- edges
+      c <- out.getOrElse(b, Nil) if edgeSet((c, a)) && a < b && a < c
+    } yield Seq(a, b, c)
+    val n = cycles.flatten.groupMapReduce(identity)(_ => 1L)(_ + _)
+    local(nation, "nation string, n_cycles bigint not null",
+      nodes.map(v => Row(v, n.getOrElse(v, 0L))))
   }
 
   /** Synchronous label propagation over the undirected trade graph
@@ -192,36 +176,25 @@ object GraphOps {
     * minimum, so the fixpoint is deterministic — no random sweep order);
     * isolated nodes keep their own label.
     *
-    * Scale: the fact is touched once via the shared memoized
-    * [[tradeEdges]] derivation; each of the fixed `rounds` is two
-    * map-side-combined keyspace-grain aggregations ((node, label)
-    * counts, then the per-node argmax as min(struct(-count, label))) —
-    * the statically-unrolled PageRank loop shape, with the label table
-    * never larger than the node set.
+    * Scale: one collect of the Memo-shared edge list; each of the fixed
+    * `rounds` is a driver pass over ≤ |nations|² undirected edges.
     */
   def nationCommunities(lineitem: DataFrame, orders: DataFrame,
       customer: DataFrame, supplier: DataFrame, nation: DataFrame,
       rounds: Int = 3): DataFrame = {
-    val e0 = tradeEdges(lineitem, orders, customer, supplier, nation)
-      .filter(col("src") =!= col("dst"))
-    val und = Memo.managedCheckpoint(
-      e0.select(col("src").as("u"), col("dst").as("v"))
-        .unionByName(e0.select(col("dst").as("u"), col("src").as("v")))
-        .distinct())
-    val nodes = nation.select(col("n_name").as("nation"))
-    val l0 = nodes.select(col("nation"), col("nation").as("community"))
-    (1 to rounds).foldLeft(l0) { (labels, _) =>
-      val best = und
-        .join(labels.select(col("nation").as("v"), col("community")), Seq("v"))
-        .groupBy(col("u"), col("community"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy(col("u"))
-        .agg(min(struct((-col("c")).as("nc"), col("community"))).as("m"))
-        .select(col("u").as("nation"), col("m.community").as("next_community"))
-      nodes.join(best, Seq("nation"), "left")
-        .select(col("nation"),
-          coalesce(col("next_community"), col("nation")).as("community"))
+    val (nodes, weighted) = tradeGraph(lineitem, orders, customer, supplier, nation)
+    val neighbours = weighted
+      .flatMap { case (s, d, _) => if (s != d) Seq(s -> d, d -> s) else Nil }
+      .distinct.groupMap(_._1)(_._2)
+    val labels = (1 to rounds).foldLeft(nodes.map(v => v -> v).toMap) { (l, _) =>
+      nodes.map(u => u -> neighbours.get(u).fold(u) { vs =>
+        // most frequent neighbour label, ties to the smallest label
+        vs.groupMapReduce(l)(_ => 1L)(_ + _)
+          .minBy { case (label, count) => (-count, label) }._1
+      }).toMap
     }
+    local(nation, "nation string, community string",
+      nodes.map(v => Row(v, labels(v))))
   }
 
   /** All-pairs shortest HOP distance over the BACKBONE trade graph —
@@ -233,36 +206,28 @@ object GraphOps {
     * threshold is a rank, not an absolute count), then BFS runs
     * `maxHops` synchronous frontier rounds. Unreached pairs are absent
     * from the output — reachability within maxHops is part of the
-    * answer.
+    * answer; every node reaches itself at 0 hops.
     *
-    * Scale: the fact is touched once via the Memo-shared
-    * [[tradeEdgeWeights]] derivation; the topK rank is a window over
-    * the ≤|nations|² edge table, and each BFS round is a join of two
-    * nation-bounded tables (≤|nations|² reach rows × topK edges) — the
-    * statically-unrolled PageRank loop shape.
+    * Scale: one collect of the Memo-shared edge list; the topK sort and
+    * the per-source BFS run on the driver over ≤ |nations|² edges.
     */
   def nationHopDistance(lineitem: DataFrame, orders: DataFrame,
       customer: DataFrame, supplier: DataFrame, nation: DataFrame,
       topK: Int = 96, maxHops: Int = 6): DataFrame = {
-    val backbone = Memo.managedCheckpoint(
-      tradeEdgeWeights(lineitem, orders, customer, supplier, nation)
-        .filter(col("src") =!= col("dst"))
-        // bounded window: ≤|nations|² rows by construction
-        .withColumn("rk", row_number().over(org.apache.spark.sql.expressions
-          .Window.orderBy(col("cnt").desc, col("src"), col("dst"))))
-        .filter(col("rk") <= topK)
-        // edge-distinct names keep the iterated frontier join unambiguous
-        .select(col("src").as("e_src"), col("dst").as("e_dst")))
-    val r0 = nation.select(col("n_name").as("s"), col("n_name").as("v"),
-      lit(0L).as("hops"))
-    val reach = (1 to maxHops).foldLeft(r0) { (r, _) =>
-      val step = r
-        .join(backbone, col("v") === col("e_src"))
-        .select(col("s"), col("e_dst").as("v"), (col("hops") + 1L).as("hops"))
-      r.unionByName(step)
-        .groupBy(col("s"), col("v")).agg(min(col("hops")).as("hops"))
+    val (nodes, weighted) = tradeGraph(lineitem, orders, customer, supplier, nation)
+    val backbone = weighted.filter(e => e._1 != e._2)
+      .sortBy(e => (-e._3, e._1, e._2)).take(topK)
+      .groupMap(_._1)(_._2)
+    val rows = nodes.flatMap { s =>
+      val hops = scala.collection.mutable.LinkedHashMap(s -> 0L)
+      var frontier = Seq(s)
+      for (h <- 1L to maxHops.toLong) {
+        frontier = frontier.flatMap(backbone.getOrElse(_, Nil)).distinct
+          .filterNot(hops.contains)
+        frontier.foreach(hops(_) = h)
+      }
+      hops.map { case (v, h) => Row(s, v, h) }
     }
-    reach.select(col("s").as("src_nation"), col("v").as("dst_nation"),
-      col("hops"))
+    local(nation, "src_nation string, dst_nation string, hops bigint", rows)
   }
 }

@@ -1,6 +1,9 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.ListenerBusProbe
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 
 class GraphOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -23,13 +26,28 @@ class GraphOpsSpec extends SparkSpec {
 
   test("an edgeless graph converges to the base rank for every node") {
     val empty = Seq.empty[(Long, Long)]
-    val ranks = GraphOps.nationTradePagerank(
-      empty.toDF("l_orderkey", "l_suppkey"),
-      empty.toDF("o_orderkey", "o_custkey"),
-      Seq.empty[(Long, Int)].toDF("c_custkey", "c_nationkey"),
-      Seq.empty[(Long, Int)].toDF("s_suppkey", "s_nationkey"),
-      nation).collect().map(r => r.getLong(1)).toSeq
+    val lineitem = empty.toDF("l_orderkey", "l_suppkey")
+    val orders = empty.toDF("o_orderkey", "o_custkey")
+    val customer = Seq.empty[(Long, Int)].toDF("c_custkey", "c_nationkey")
+    val supplier = Seq.empty[(Long, Int)].toDF("s_suppkey", "s_nationkey")
+    val ranks = GraphOps.nationTradePagerank(lineitem, orders, customer,
+      supplier, nation).collect().map(r => r.getLong(1)).toSeq
     assert(ranks == Seq(75000L, 75000L))
+    // every HITS round totals nothing: nullif(tot, 0) makes both scores null
+    val hits = GraphOps.nationTradeHits(lineitem, orders, customer,
+      supplier, nation).collect()
+      .map(r => r.getString(0) -> (r.get(1), r.get(2))).toMap
+    assert(hits == Map("A" -> (null, null), "B" -> (null, null)))
+    val communities = GraphOps.nationCommunities(lineitem, orders, customer,
+      supplier, nation).collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(communities == Map("A" -> "A", "B" -> "B"))
+    val hops = GraphOps.nationHopDistance(lineitem, orders, customer,
+      supplier, nation).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    assert(hops == Set(("A", "A", 0L), ("B", "B", 0L)))
+    val triangles = GraphOps.nationTradeTriangles(lineitem, orders, customer,
+      supplier, nation).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(triangles == Map("A" -> 0L, "B" -> 0L))
   }
 
   test("duplicate trade lines collapse to one edge (distinct pairs)") {
@@ -61,8 +79,10 @@ class GraphOpsSpec extends SparkSpec {
     var a = nodes.map(_ -> 1000000L).toMap
     def norm(raw: Map[String, Long]): Map[String, Long] = {
       val tot = raw.values.sum
-      nodes.map(n => n ->
-        (if (tot == 0) 0L else raw.getOrElse(n, 0L) * 1000000L / tot)).toMap
+      // a zero total makes every score null (nullif(tot, 0)), pinned by
+      // the edgeless case; this fixture's totals are all positive
+      assert(tot != 0)
+      nodes.map(n => n -> raw.getOrElse(n, 0L) * 1000000L / tot).toMap
     }
     for (_ <- 1 to 3) {
       a = norm(edges.groupBy(_._2).map { case (d, es) =>
@@ -133,5 +153,51 @@ class GraphOpsSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(out == Map(("A", "A") -> 0L, ("B", "B") -> 0L, ("C", "C") -> 0L,
       ("A", "B") -> 1L, ("B", "C") -> 1L, ("A", "C") -> 2L))
+  }
+
+  test("each graph operator runs at most 3 Spark jobs once the edge memo is warm") {
+    val sc = spark.sparkContext
+    val nation4 = Seq((0, "A"), (1, "B"), (2, "C"), (3, "D"))
+      .toDF("n_nationkey", "n_name")
+    // the triangle fixture: a 3-cycle, a tail edge and a self-loop
+    val supplier = Seq((10L, 0), (11L, 1), (12L, 2)).toDF("s_suppkey", "s_nationkey")
+    val customer = Seq((20L, 0), (21L, 1), (22L, 2), (23L, 3))
+      .toDF("c_custkey", "c_nationkey")
+    val orders = Seq((30L, 21L), (31L, 22L), (32L, 20L), (33L, 23L), (34L, 21L))
+      .toDF("o_orderkey", "o_custkey")
+    val lineitem = Seq((30L, 10L), (31L, 11L), (32L, 12L), (33L, 10L), (34L, 11L))
+      .toDF("l_orderkey", "l_suppkey")
+    GraphOps.tradeEdgeWeights(lineitem, orders, customer, supplier, nation4).count()
+    val group = "graph-ops-job-budget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    def jobsOf(op: => DataFrame): Int = {
+      ListenerBusProbe.drain(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, group)
+      try op.collect() finally sc.clearJobGroup()
+      ListenerBusProbe.drain(sc)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    val counts = try Seq(
+      "pagerank" -> jobsOf(GraphOps.nationTradePagerank(lineitem, orders,
+        customer, supplier, nation4)),
+      "hits" -> jobsOf(GraphOps.nationTradeHits(lineitem, orders,
+        customer, supplier, nation4)),
+      "triangles" -> jobsOf(GraphOps.nationTradeTriangles(lineitem, orders,
+        customer, supplier, nation4)),
+      "communities" -> jobsOf(GraphOps.nationCommunities(lineitem, orders,
+        customer, supplier, nation4)),
+      "hop_distance" -> jobsOf(GraphOps.nationHopDistance(lineitem, orders,
+        customer, supplier, nation4)))
+    finally sc.removeSparkListener(listener)
+    info(counts.map { case (op, n) => s"$op=$n" }.mkString("jobs: ", " ", ""))
+    assert(counts.forall(_._2 <= 3), s"over the 3-job budget: $counts")
   }
 }

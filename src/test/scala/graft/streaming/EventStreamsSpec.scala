@@ -955,4 +955,24 @@ class EventStreamsSpec extends SparkSpec {
     assert(unknownCounts.sum == 1L,
       s"the dropped unknown-lang doc must surface in observedMetrics: $unknownCounts")
   }
+
+  test("stateful-stream state schemas are locked: a change is a visible re-lock") {
+    import org.apache.spark.sql.Encoders
+    // a checkpoint written under one state schema cannot be resumed under
+    // another; a deliberate change edits this lock and says so
+    val locked = Map(
+      "SessionState" -> Encoders.product[EventStreams.SessionState],
+      "OpenSession" -> Encoders.product[EventStreams.OpenSession],
+      "AnomalyState" -> Encoders.product[EventStreams.AnomalyState],
+      "BucketState" -> Encoders.product[EventStreams.BucketState],
+      "PatternMatchState" -> Encoders.product[EventStreams.PatternMatchState])
+      .map { case (k, enc) => k -> enc.schema.simpleString }
+    assert(locked == Map(
+      "SessionState" -> ("struct<sessionCount:bigint,eventCount:bigint," +
+        "lastTs:bigint,sessionStart:bigint,maxDuration:bigint>"),
+      "OpenSession" -> "struct<start:bigint,lastTs:bigint,n:bigint>",
+      "AnomalyState" -> "struct<nHours:bigint,sx:bigint,sxx:bigint>",
+      "BucketState" -> "struct<tokensMilli:bigint,lastTs:bigint>",
+      "PatternMatchState" -> "struct<anchors:array<bigint>,best:bigint>"))
+  }
 }
